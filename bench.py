@@ -299,8 +299,8 @@ def _variant_queries():
         # entry keeps the bootstrap face that matches its driver oracle.
         from pyspark.sql import functions as F
 
+        from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION
         from export_oltp_to_olap_spark.plans.curation import (
-            DELTA_CUT_FRACTION,
             curated_delta,
             standing_state,
         )
@@ -338,15 +338,12 @@ def _variant_queries():
         from pyspark.sql import functions as F
 
         from export_oltp_to_olap_spark.multimodal import media
+        from export_oltp_to_olap_spark.operators.diff import delta_cut
         from export_oltp_to_olap_spark.operators.staging import stage
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         if sf_dir not in _media_standing_cache:
-            cut = docs.agg(
-                F.floor(
-                    F.lit(media.MEDIA_DELTA_CUT_FRACTION) * F.max("doc_id")
-                ).alias("c")
-            ).first()["c"]
+            cut = delta_cut(docs).first()["cut"]
             old = docs.where(F.col("doc_id") <= cut)
             _media_standing_cache[sf_dir] = stage(
                 media.media_byte_histograms(media.synthesize_media(old)),
@@ -392,15 +389,12 @@ def _variant_queries():
         from pyspark.sql import functions as F
 
         from export_oltp_to_olap_spark.operators import neardup
+        from export_oltp_to_olap_spark.operators.diff import delta_cut
         from export_oltp_to_olap_spark.operators.staging import stage
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         if sf_dir not in _clusters_standing_cache:
-            cut = docs.agg(
-                F.floor(
-                    F.lit(neardup.CLUSTERS_DELTA_CUT_FRACTION) * F.max("doc_id")
-                ).alias("c")
-            ).first()["c"]
+            cut = delta_cut(docs).first()["cut"]
             old = docs.where(F.col("doc_id") <= cut)
             sets, bands = neardup.neardup_standing_index(old)
             _clusters_standing_cache[sf_dir] = (
@@ -446,15 +440,12 @@ def _variant_queries():
         # The base `neardup_clusters_retract` entry keeps the
         # self-contained bootstrap face that matches its full-rebuild
         # driver oracle.
-        from pyspark.sql import functions as F
-
         from export_oltp_to_olap_spark.operators import neardup
+        from export_oltp_to_olap_spark.operators.diff import tombstoned
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         labels, sets, bands = _retract_standing_state(spark, sf_dir)
-        deleted = docs.select("doc_id").where(
-            F.col("doc_id") % neardup.RETRACT_MOD == 0
-        )
+        deleted = tombstoned(docs.select("doc_id"))
         return neardup.neardup_clusters_retract(
             docs, deleted, labels, standing_sets=sets, standing_bands=bands
         )
@@ -468,15 +459,12 @@ def _variant_queries():
         # re-propagation + the map-side split hash.  The base
         # `leakage_split_retract` entry keeps the self-contained
         # bootstrap face that matches its full-rebuild driver oracle.
-        from pyspark.sql import functions as F
-
+        from export_oltp_to_olap_spark.operators.diff import tombstoned
         from export_oltp_to_olap_spark.plans import leakage
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         labels, sets, bands = _retract_standing_state(spark, sf_dir)
-        deleted = docs.select("doc_id").where(
-            F.col("doc_id") % leakage.SPLIT_RETRACT_MOD == 0
-        )
+        deleted = tombstoned(docs.select("doc_id"))
         return leakage.leakage_safe_split_retract(
             docs,
             deleted_ids=deleted,

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION, delta_cut
 from export_oltp_to_olap_spark.operators.partitioning import spread_for_compute
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -934,8 +935,6 @@ ORDER BY kind
 # Delta-vs-standing near-dup (the daily-ingest face)
 # ---------------------------------------------------------------------------
 
-MEDIA_DELTA_CUT_FRACTION = 0.9  # fixture delta = ids above 90% of max
-
 
 def media_neardup_delta(
     documents: DataFrame,
@@ -950,11 +949,10 @@ def media_neardup_delta(
     rebuild's pairs with at least one NEW side ((new,new) and
     (old,new); (old,old) was reported when the old batch landed).
 
-    Fixture shape: delta = ids above ``MEDIA_DELTA_CUT_FRACTION·max``
-    (the `incremental_corpus_delta` convention); the standing side's
-    histograms are derived in-call here and PERSISTED in production
-    (`media_byte_histograms` output is the standing side table, exactly
-    like the winnowing fingerprint table).  Because blocking is
+    Fixture shape: the shared append batch (ids above `delta_cut`);
+    the standing side's histograms are derived in-call here and
+    PERSISTED in production (`media_byte_histograms` output is the
+    standing side table, exactly like the winnowing fingerprint table).  Because blocking is
     deterministic and lossless and the cell cap is computed over the
     UNION (standing ∪ new — a cell is degenerate-hot no matter which
     batch its members arrived in), incremental ≡ rebuild-restricted is
@@ -974,9 +972,7 @@ def media_neardup_delta(
     """
     from export_oltp_to_olap_spark.operators.staging import stage_fanout
 
-    cut = documents.agg(
-        F.floor(F.lit(MEDIA_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
+    cut = delta_cut(documents)
     if standing_hists is None:
         hists, cells = _media_stats_and_cells(documents, threshold)
     else:
@@ -1061,7 +1057,7 @@ def media_neardup_delta_sql(
     return f"""
 {_media_blocking_ctes(threshold, max_cell_items)},
 cutv AS (
-  SELECT CAST(floor({MEDIA_DELTA_CUT_FRACTION} * max(media_id)) AS BIGINT) AS cut
+  SELECT CAST(floor({DELTA_CUT_FRACTION} * max(media_id)) AS BIGINT) AS cut
   FROM stats
 ),
 ok AS (

@@ -28,6 +28,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.functions.text import tokens
+from export_oltp_to_olap_spark.operators.diff import (
+    SURVIVORS_CTE,
+    maintain_monoid,
+    split_at_cut,
+    tombstoned,
+)
 from export_oltp_to_olap_spark.operators.sampling import _hash_bucket
 
 CHUNK_TOKENS = 32  # fixture default: synthetic docs run ~40-200 tokens
@@ -194,15 +200,13 @@ def pack_bins_delta(
     standing_totals: DataFrame,
     window: int = PACK_WINDOW,
 ) -> DataFrame:
-    """`pack_bins_summary` for an append-only delta batch against the
-    PERSISTED (source, bin) summary — incremental ≡ full rebuild
-    EXACTLY: prior docs' offsets (hence bins) are immutable under
-    append, a delta doc's offset is carry + delta prefix sum, and the
-    per-(source, bin) doc/token counts are additive, so the boundary
-    bin that receives docs from both batches merges by SUM.  Steady
-    state is O(|delta|): one window over the delta batch, one
-    broadcast of the S-row carry, one merge keyed like the standing
-    table — nothing re-tokenizes or re-places the standing corpus.
+    """`pack_bins_summary` for an append-only batch against the
+    persisted (source, bin) summary.  Exact: prior docs' offsets, hence
+    bins, cannot move under append; a batch doc's offset is the
+    standing per-source total plus the batch prefix sum; and the
+    per-(source, bin) counts are sums, so the boundary bin that gets
+    docs from both batches merges by SUM.  Only the batch is tokenized
+    and placed.
     """
     from pyspark.sql import Window as W
 
@@ -228,30 +232,16 @@ def pack_bins_delta(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
     )
-    return (
-        standing_bins.unionByName(delta_summary)
-        .groupBy("source", "bin")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .orderBy("source", "bin")
-    )
-
-
-PACK_DELTA_CUT_FRACTION = 0.9
+    return maintain_monoid(
+        standing_bins, ["source", "bin"], ["n_docs", "n_tokens"], added=delta_summary
+    ).orderBy("source", "bin")
 
 
 def pack_bins_delta_fixture(docs: DataFrame, window: int = PACK_WINDOW) -> DataFrame:
-    """Fixture face: delta = ids above 90% of max (the established
-    delta convention); standing summary and carry derive in-call
-    (persist in production).  The merge is exact, so the ORACLE is the
-    full-rebuild SQL — incremental ≡ rebuild hash-checked directly."""
-    cut = docs.agg(
-        F.floor(F.lit(PACK_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; standing summary and carry
+    derive in-call (persisted in production).  Oracle = the
+    full-rebuild SQL."""
+    standing, new_docs = split_at_cut(docs)
     return pack_bins_delta(
         new_docs,
         pack_bins_summary(standing, window),
@@ -261,7 +251,7 @@ def pack_bins_delta_fixture(docs: DataFrame, window: int = PACK_WINDOW) -> DataF
 
 
 # ---------------------------------------------------------------------------
-# Delete maintenance of the packing carry (VERDICT r13 item 6)
+# Delete maintenance of the packing carry
 # ---------------------------------------------------------------------------
 #
 # The per-(source, bin) SUMMARY is not delete-maintainable by
@@ -271,8 +261,6 @@ def pack_bins_delta_fixture(docs: DataFrame, window: int = PACK_WINDOW) -> DataF
 # additive monoid, and it is the state the delta path actually consumes
 # (`pack_bins_delta`'s standing_totals): keeping it delete-exact keeps
 # the append path exact after compaction re-packs the affected lanes.
-
-PACK_RETRACT_MOD = 10  # the delete ladder's shared tombstone convention
 
 
 def pack_source_state(docs: DataFrame) -> DataFrame:
@@ -296,43 +284,26 @@ def pack_source_state(docs: DataFrame) -> DataFrame:
 def pack_source_totals_retract(
     deleted_docs: DataFrame, standing_state: DataFrame
 ) -> DataFrame:
-    """Delete/tombstone maintenance of the packing carry: subtract the
-    tombstoned docs' own per-source counts/sums, drop sources whose
-    doc count reaches zero (`vocab_df_retract`'s convention).  Steady
-    state tokenizes the |deleted| docs only."""
-    removed = pack_source_state(deleted_docs).select(
-        "source",
-        F.col("n_docs").alias("docs_rm"),
-        F.col("total_tokens").alias("toks_rm"),
-    )
-    return (
-        standing_state.join(removed, "source", "left")
-        .select(
-            "source",
-            (F.col("n_docs") - F.coalesce(F.col("docs_rm"), F.lit(0)))
-            .cast("long")
-            .alias("n_docs"),
-            (F.col("total_tokens") - F.coalesce(F.col("toks_rm"), F.lit(0)))
-            .cast("long")
-            .alias("total_tokens"),
-        )
-        .where(F.col("n_docs") > 0)
-        .orderBy("source")
-    )
+    """Delete maintenance of the packing carry: subtract the tombstoned
+    docs' own per-source counts and sums; a source leaves when its doc
+    count reaches zero.  Tokenizes the deleted docs only."""
+    return maintain_monoid(
+        standing_state,
+        ["source"],
+        ["n_docs", "total_tokens"],
+        removed=pack_source_state(deleted_docs),
+    ).orderBy("source")
 
 
 def pack_totals_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every PACK_RETRACT_MOD-th doc_id;
-    standing carry derives in-call (persisted in production).  ORACLE =
-    the rebuild aggregation over the survivors."""
-    deleted = docs.where(F.col("doc_id") % PACK_RETRACT_MOD == 0)
-    return pack_source_totals_retract(deleted, pack_source_state(docs))
+    """Fixture face: the shared delete batch; standing carry derives
+    in-call (persisted in production).  Oracle = the rebuild
+    aggregation over the survivors."""
+    return pack_source_totals_retract(tombstoned(docs), pack_source_state(docs))
 
 
 PACK_TOTALS_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {PACK_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 toks AS (
   SELECT source,
          CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),

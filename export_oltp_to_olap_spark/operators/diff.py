@@ -144,6 +144,84 @@ def diff_summary(diff: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Incremental maintenance of standing aggregates, and the fixture batches
+# every *_delta / *_retract face slices from one snapshot
+# ---------------------------------------------------------------------------
+
+
+def maintain_monoid(
+    standing: DataFrame,
+    keys: list[str],
+    measures: list[str],
+    added: DataFrame | None = None,
+    removed: DataFrame | None = None,
+) -> DataFrame:
+    """Apply a batch to a standing keyed aggregate whose measures are
+    sums: ``standing + added − removed`` per key.
+
+    Exact for any aggregate a document contributes to additively (doc
+    counts, token sums), so nothing re-reads the standing corpus.  The
+    first measure must count contributors: a key whose count falls to
+    zero has none left and leaves the table, as it would in a rebuild.
+    ``removed`` must hold contributions that ``standing`` contains, so
+    it is subtracted through a left join, which keeps the standing
+    side's key partitioning; a union and re-aggregation measured one
+    more stage per merge.  Measure types follow ``standing``."""
+    types = standing.schema
+    out = standing.select(*keys, *measures)
+    if added is not None:
+        out = (
+            out.unionByName(added.select(*keys, *measures))
+            .groupBy(*keys)
+            .agg(*[F.sum(m).alias(m) for m in measures])
+        )
+    if removed is not None:
+        rm = removed.select(*keys, *[F.col(m).alias(f"_rm_{m}") for m in measures])
+        out = out.join(rm, keys, "left").select(
+            *keys,
+            *[(F.col(m) - F.coalesce(F.col(f"_rm_{m}"), F.lit(0))).alias(m) for m in measures],
+        )
+    return out.select(
+        *keys, *[F.col(m).cast(types[m].dataType).alias(m) for m in measures]
+    ).where(F.col(measures[0]) > 0)
+
+
+DELTA_CUT_FRACTION = 0.9  # fixture append batch: ids above ⌊0.9·max⌋
+RETRACT_MOD = 10  # fixture delete batch: every 10th id
+
+# The oracles' restatement of the delete batch: a ``survivors`` CTE that
+# replaces the raw ``documents`` scan of the rebuild statement.
+SURVIVORS_CTE = f"""survivors AS (
+  SELECT * FROM documents WHERE doc_id % {RETRACT_MOD} <> 0
+)"""
+
+
+def delta_cut(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """One-row ``(cut)`` frame: ⌊DELTA_CUT_FRACTION · max(id)⌋."""
+    return docs.agg(
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max(id_col)).alias("cut")
+    )
+
+
+def split_at_cut(
+    docs: DataFrame, id_col: str = "doc_id"
+) -> tuple[DataFrame, DataFrame]:
+    """``(standing, delta)``: ids at or below :func:`delta_cut`, and the
+    ids above it.  Every delta id exceeds every standing id, the
+    append-only precondition of the delta faces."""
+    cut = F.broadcast(delta_cut(docs, id_col))
+    standing = docs.join(cut, F.col(id_col) <= F.col("cut")).drop("cut")
+    delta = docs.join(cut, F.col(id_col) > F.col("cut")).drop("cut")
+    return standing, delta
+
+
+def tombstoned(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The fixture delete batch: rows whose id is a multiple of
+    RETRACT_MOD."""
+    return docs.where(F.col(id_col) % RETRACT_MOD == 0)
+
+
+# ---------------------------------------------------------------------------
 # Fixture face — a deterministic "revised snapshot" of `customer` so the
 # diff has a cross-engine oracle: drop keys %89, bump acctbal on %97,
 # re-segment %61, add shifted copies of %101.

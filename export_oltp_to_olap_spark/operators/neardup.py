@@ -32,10 +32,17 @@ Scale design (100 TB corpora):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.functions.text import tokens, word_shingles
+from export_oltp_to_olap_spark.operators.diff import (
+    SURVIVORS_CTE,
+    split_at_cut,
+    tombstoned,
+)
 from export_oltp_to_olap_spark.operators.partitioning import spread_for_compute
 from export_oltp_to_olap_spark.operators.staging import stage, stage_fanout
 
@@ -1309,7 +1316,7 @@ SIMHASH_SWEEP_RADII = (2, 4, 6)
 def simhash_radius_sweep(
     docs: DataFrame, radii: tuple[int, ...] = SIMHASH_SWEEP_RADII
 ) -> DataFrame:
-    """The radius dial on the SimHash family card (VERDICT r12 item 8):
+    """The radius dial on the SimHash family card:
     `simhash_recall_audit` measured hamming≤2 recalling only 0.10 of
     ≥0.5-Jaccard truth — the quantified "SimHash at tight radius is a
     near-exact detector" finding.  The natural follow-up question is
@@ -1326,7 +1333,8 @@ def simhash_radius_sweep(
     and each radius is a filter over the shared pair set — the
     threshold-curve convention (`neardup_threshold_curve`), not a
     per-radius re-join.  Shares the exact truth stage with the other
-    family audits; eager execute + unpersist like its siblings."""
+    family audits; each radius frame executes eagerly, then the shared
+    inputs are released, like its siblings."""
     sets = doc_shingle_sets(docs).where(F.size("shs") > 0)
     sets = sets.withColumn("n_sh", F.size("shs")).persist()
     truth = _jaccard_truth_bands(sets)
@@ -1346,7 +1354,9 @@ def simhash_radius_sweep(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    frame = out.orderBy("radius", "band").localCheckpoint()
+    # Each radius frame is already materialized by _recall_audit_frame,
+    # so the union reads none of the frames released below.
+    frame = out.orderBy("radius", "band")
     found_all.unpersist()
     sets.unpersist()
     return frame
@@ -1470,22 +1480,12 @@ def neardup_clusters(
     No SQL-oracle restriction: the closure is restated in DuckDB as a
     recursive CTE (``NEARDUP_CLUSTERS_SQL``), so this IS value-checked.
     """
-    # Materialize the DIRECTED pair list once before symmetrizing
-    # (optimization r15): the symmetric union references `pairs` in
-    # both branches, so an unstaged detector plan (banded candidates +
-    # exact verify) was evaluated TWICE when the edge cache
-    # materialized (neardup_clusters solo 3.16 → 1.99 s at sf0.1;
-    # guide §2.4 reuse — the broadcast/union re-evaluation lesson of
-    # the curated faces applied here).  Callers that already cached
-    # their pair frame (the quotient faces stage their qedges for the
-    # active-node union; leakage stages its pair table for the
-    # retract) skip the redundant second cache — re-scanning a cached
-    # parent is cheap, re-caching it is one more job per face.
+    # Materialize the directed pair list once before symmetrizing: the
+    # union reads `pairs` in both branches, so an unstaged detector plan
+    # would run twice.  A caller-cached pair frame is re-scanned instead.
     half = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    already_cached = (
-        pairs.storageLevel.useMemory or pairs.storageLevel.useDisk
-    )
-    if not already_cached:
+    staged_half = not (pairs.storageLevel.useMemory or pairs.storageLevel.useDisk)
+    if staged_half:
         half = stage_fanout(half)
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1497,13 +1497,10 @@ def neardup_clusters(
             .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
-        # Carry the previous label THROUGH the staged frame so the
-        # convergence check is a filter-count over the round's own
-        # blocks (optimization r14), and stage LAZILY so that count IS
-        # the materializing action — ONE job per round instead of an
-        # eager-stage job followed by a count job (optimization r15,
-        # VERDICT r14 item 4; the filter-count computes every partition,
-        # which is exactly what completes the staged blocks).
+        # The previous label rides through the lazily staged frame, so
+        # the convergence filter-count is the action that materializes
+        # the round: one job per round.  The count must read every
+        # partition for the staged blocks to be complete.
         new_labels = stage(
             labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
             .select(
@@ -1523,7 +1520,10 @@ def neardup_clusters(
         raise RuntimeError(
             f"label propagation did not converge in {max_iterations} rounds"
         )
+    # The returned frame reads only the staged labels.
     edges.unpersist()
+    if staged_half:
+        half.unpersist()
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")
@@ -1578,156 +1578,30 @@ def neardup_clusters_delta(
     standing_sets: DataFrame | None = None,
     standing_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Incremental maintenance of the near-dup CLUSTER map for an
-    append-only delta batch — the operator that makes corpus dedup
-    maintainable at 100 TB: a nightly batch must not re-run connected
-    components over the whole corpus to absorb D ≪ C new documents.
+    """Absorb an append-only batch into the standing near-dup cluster
+    map without re-running connected components over the corpus.
 
-    Construction (quotient-graph label propagation):
-
-    1. Delta-touching pairs come from `minhash_lsh_neardup_delta` (the
-       persisted band-index probe — nothing re-pairs the standing
-       corpus against itself).
-    2. Each pair endpoint maps to its QUOTIENT node: a standing doc
-       collapses to its standing ``canonical_id``, a delta doc stands
-       for itself.  New edges can merge standing clusters only through
-       a delta bridge, so components over this quotient graph —
-       |standing clusters| + |delta| nodes, |delta pairs| edges —
-       decide every merge the full rebuild would make.
-    3. Min-label propagation over the quotient graph (the
-       `neardup_clusters` loop on a graph that is smaller by the mean
-       cluster size), then standing docs relabel THROUGH their old
-       canonical and sizes recount over the final map.
-
-    EXACTNESS (the oracle is the FULL-REBUILD recursive CTE, so the
-    driver hash-checks incremental ≡ rebuild directly).  CONTRACT on
-    ``standing_labels`` — the invariant the quotient argument actually
-    consumes (promoted from the upsert call site, ADVICE r13):
-
-    * ``canonical_id`` is the MIN member doc_id of its cluster (so the
-      min quotient-node id of any merged component IS the min doc id
-      of the merged cluster — the rebuild's canonical), and
-    * the map was produced under the same pair detector and threshold.
-
-    Every producer in this module satisfies the first clause by
-    construction: `neardup_clusters` labels with the component min, and
-    `neardup_clusters_retract` re-elects minima over survivors — which
-    is what lets `neardup_clusters_upsert` re-enter changed docs with
-    their OLD (non-monotone) ids.  Id-monotone appends (every delta id
-    above every standing id, the `source_novelty_delta` family
-    precondition) remain a SUFFICIENT condition for externally-supplied
-    maps, not a necessary one.  ``validate_contract=True`` asserts the
-    min-id clause with one aggregation over the standing map (a debug
-    job — leave off in production; the upsert property tests run it).
-
-    Steady-state cost: the delta pair probe + label propagation whose
-    rounds are bounded by the diameter of the DELTA-INDUCED quotient
-    subgraph (untouched clusters converge in round one).  Pass
-    ``standing_sets`` / ``standing_bands`` (:func:`neardup_standing_index`
-    output — VERDICT r13 item 5) and the probe consumes the persisted
-    shingle-set/band-index tables directly, so the batch never
-    re-shingles the standing corpus; left at ``None`` they derive from
-    ``standing_docs`` in-call (the oracle-fixture path).
-    """
-    lab = standing_labels.select("doc_id", "canonical_id")
-    if validate_contract:
-        bad = (
-            lab.groupBy("canonical_id")
-            .agg(F.min("doc_id").alias("mn"))
-            .where(F.col("canonical_id") != F.col("mn"))
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                f"neardup_clusters_delta: standing_labels violates the "
-                f"canonical-is-cluster-min contract for {bad} cluster(s)"
-            )
-    pairs = minhash_lsh_neardup_delta(
+    Precondition: every ``new_docs`` id is absent from the standing
+    corpus.  This is :func:`neardup_clusters_upsert` with no deletes,
+    which skips its affected-cluster, re-pair and survivor joins.  The
+    oracle is the full-rebuild recursive CTE."""
+    return neardup_clusters_upsert(
         standing_docs,
+        standing_labels,
         new_docs,
-        release_cache=True,
-        corpus_sets=standing_sets,
-        corpus_bands=standing_bands,
-    ).select("doc_a", "doc_b")
-    qa = lab.select(
-        F.col("doc_id").alias("doc_a"), F.col("canonical_id").alias("q_a")
+        None,
+        max_iterations,
+        standing_sets,
+        standing_bands,
+        validate_contract=validate_contract,
     )
-    qb = lab.select(
-        F.col("doc_id").alias("doc_b"), F.col("canonical_id").alias("q_b")
-    )
-    qedges = (
-        pairs.join(qa, "doc_a", "left")
-        .join(qb, "doc_b", "left")
-        .select(
-            F.coalesce("q_a", "doc_a").alias("doc_a"),
-            F.coalesce("q_b", "doc_b").alias("doc_b"),
-        )
-        .where(F.col("doc_a") != F.col("doc_b"))
-        .distinct()
-    )
-    qnodes = (
-        lab.select(F.col("canonical_id").alias("doc_id"))
-        .distinct()
-        .unionByName(new_docs.select("doc_id"))
-        .distinct()
-    )
-    # Stage the quotient edges once (optimization r15): the active-node
-    # union below references qedges twice and the propagation loop's
-    # edge build references it again — unstaged, the probe's candidate
-    # join + verify re-ran per reference.
-    qedges = stage_fanout(qedges)
-    # Propagate ONLY over the delta-ACTIVE quotient subgraph (nodes
-    # touching a new edge): every other quotient node is a singleton
-    # there and keeps its own id — at 100 TB the standing cluster
-    # population must never enter the iterative loop just to confirm
-    # nothing touched it.
-    active = (
-        qedges.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(qedges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    active_labels = neardup_clusters(active, qedges, max_iterations).select(
-        "doc_id", F.col("canonical_id").alias("active_label")
-    )
-    qlabels = (
-        qnodes.join(active_labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("active_label", "doc_id").alias("new_label"),
-        )
-    )
-    standing_final = lab.join(
-        qlabels.withColumnRenamed("doc_id", "canonical_id"), "canonical_id"
-    ).select("doc_id", F.col("new_label").alias("canonical_id"))
-    delta_final = (
-        new_docs.select("doc_id")
-        .join(qlabels, "doc_id")
-        .select("doc_id", F.col("new_label").alias("canonical_id"))
-    )
-    final = standing_final.unionByName(delta_final)
-    sizes = final.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return final.join(sizes, "canonical_id").select(
-        "doc_id", "canonical_id", "cluster_size"
-    )
-
-
-CLUSTERS_DELTA_CUT_FRACTION = 0.9
 
 
 def neardup_clusters_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max (the
-    `incremental_corpus_delta` convention); standing labels derive
-    in-call via the registered cluster build on the standing slice
-    (persisted between batches in production).  The merge is exact, so
-    the ORACLE is the full-rebuild recursive CTE — incremental ≡
-    rebuild hash-checked directly by the driver."""
-    cut = docs.agg(
-        F.floor(F.lit(CLUSTERS_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    delta = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch (`split_at_cut`); standing
+    labels derive in-call (persisted between batches in production).
+    The merge is exact, so the oracle is the full-rebuild CTE."""
+    standing, delta = split_at_cut(docs)
     return neardup_clusters_delta(
         standing, delta, minhash_neardup_clusters(standing)
     )
@@ -1767,120 +1641,37 @@ def neardup_clusters_retract(
     standing_bands: DataFrame | None = None,
     standing_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Delete/tombstone maintenance of the near-dup CLUSTER map — the
-    quotient trick in reverse (VERDICT r12 item 3): remove a doc set
-    from the standing state by re-propagating ONLY the clusters that
-    contained a deleted doc.
+    """Remove a delete batch from the standing near-dup cluster map,
+    re-propagating only the clusters that contained a deleted doc.
+    Exact with no id-ordering precondition: deleting a bridge splits
+    its component and deleting a canonical re-elects the min survivor.
 
-    Why only those clusters, and why that is EXACT (no id-monotonicity
-    precondition, unlike the append delta):
-
-    1. The standing map is the transitive closure of the pair
-       detector's edges over the standing corpus, so no edge ever
-       crosses two standing clusters — a cross-cluster pair would have
-       merged them.  Deleting docs removes edges, never adds them:
-       clusters WITHOUT a deleted member keep their exact membership,
-       canonical (their min id — which cannot be a deleted doc), and
-       size, so they pass through untouched.
-    2. The pair detector is per-pair deterministic and
-       corpus-independent (signatures/buckets derive from each doc's
-       own text), so the full rebuild's edges among survivors of an
-       affected cluster are exactly the detector's edges over those
-       survivors — re-running it restricted to |affected members|
-       docs reproduces the rebuild's subgraph.  Deleting a BRIDGE doc
-       splits its component; deleting a canonical re-elects the min
-       surviving id: both fall out of propagation over the restricted
-       subgraph.
-
-    Steady-state cost: O(|clusters touching the delete batch|) — the
-    detector re-pairs affected survivors only, and the standing
-    population never enters the iterative loop.  Pass ``standing_sets``
-    / ``standing_bands`` (:func:`neardup_standing_index` output — the
-    per-doc signatures / band index production already persists for
-    the APPEND path, VERDICT r13 item 5) and the re-pair becomes pure
-    joins over the persisted rows: nothing re-shingles or re-signs any
-    text (equivalence pinned by ``test_standing_signatures_equivalent``;
-    shingles and signatures are per-document, so filtering the
-    persisted rows to the affected survivors is exactly the in-call
-    derivation).  ``standing_pairs`` (optimization r15) goes one rung
-    further when the standing VERIFIED PAIR table is at hand: banding
-    and verification are both per-pair-deterministic, so the detector
-    over any subset S of the standing corpus equals the standing pair
-    set restricted to S×S (the `neardup_pairs_retract` anti-join ≡
-    re-detect claim, driver-hashed there) — the re-pair becomes two
-    joins of the persisted pairs against the affected survivors,
-    re-running nothing.  Left at ``None``, the fixture/bootstrap path
-    re-shingles the affected survivors from ``standing_docs``.
-
-    The oracle is the FULL-REBUILD recursive CTE over the surviving
-    corpus (``NEARDUP_CLUSTERS_RETRACT_SQL``), so the driver
-    hash-checks retract ≡ rebuild-after-delete directly — the
-    strongest form, matching `neardup_clusters_delta`'s convention.
-    """
-    lab = standing_labels.select("doc_id", "canonical_id", "cluster_size")
-    deleted = deleted_ids.select("doc_id").distinct()
-    # Clusters containing >= 1 deleted doc.  Bounded by the delete
-    # batch (|affected| <= |deleted|), so broadcast is the right shape
-    # at any corpus size — the standing map is probed, never shuffled.
-    affected = lab.join(deleted, "doc_id").select("canonical_id").distinct()
-    unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
-    survivors = (
-        lab.join(F.broadcast(affected), "canonical_id")
-        .select("doc_id")
-        .join(deleted, "doc_id", "left_anti")
+    This is :func:`neardup_clusters_upsert` with no changed docs, which
+    skips the probe.  The oracle is the full-rebuild recursive CTE over
+    the surviving corpus."""
+    return neardup_clusters_upsert(
+        standing_docs,
+        standing_labels,
+        None,
+        deleted_ids,
+        max_iterations,
+        standing_sets,
+        standing_bands,
+        standing_pairs,
     )
-    if standing_pairs is not None:
-        pairs = (
-            standing_pairs.join(
-                survivors.withColumnRenamed("doc_id", "doc_a"), "doc_a"
-            )
-            .join(survivors.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-            .select("doc_a", "doc_b")
-        )
-        relabeled = neardup_clusters(survivors, pairs, max_iterations)
-    elif standing_sets is not None:
-        sets_surv = standing_sets.join(survivors, "doc_id")
-        bands_surv = (
-            standing_bands.join(survivors, "doc_id")
-            if standing_bands is not None
-            else _minhash_bands(sets_surv, MINHASH_N_HASHES, MINHASH_BAND_R)
-        )
-        pairs = _verify_jaccard(
-            _band_index_candidates(bands_surv), sets_surv, 0.8
-        )
-        relabeled = neardup_clusters(survivors, pairs, max_iterations)
-    else:
-        surviving_docs = standing_docs.join(survivors, "doc_id")
-        pairs = minhash_lsh_neardup(surviving_docs)
-        relabeled = neardup_clusters(
-            surviving_docs.select("doc_id"), pairs, max_iterations
-        )
-    return unaffected.select(
-        "doc_id", "canonical_id", "cluster_size"
-    ).unionByName(relabeled)
-
-
-RETRACT_MOD = 10
 
 
 def neardup_clusters_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delete every RETRACT_MOD-th doc_id (hits cluster
-    canonicals, interiors and whole singleton clusters across the
-    fixture); standing labels derive in-call via the registered
-    cluster build (persisted between batches in production, exactly as
-    `neardup_clusters_delta_fixture` declares).  The in-call bootstrap
-    already computes the full standing PAIR table on the way to the
-    labels — thread it through ``standing_pairs`` so the retract's
-    re-pair is two joins of those rows instead of a second LSH pipeline
-    over the affected survivors (optimization r15; pairs over a subset
-    ≡ standing pairs restricted, the `neardup_pairs_retract` claim)."""
-    deleted = docs.select("doc_id").where(F.col("doc_id") % RETRACT_MOD == 0)
-    from export_oltp_to_olap_spark.operators.staging import stage_fanout
-
+    """Fixture face: the shared delete batch (`tombstoned`); standing
+    labels derive in-call (persisted between batches in production).
+    The bootstrap already computes the standing pair table on the way
+    to the labels, so it is staged once and passed as
+    ``standing_pairs``: the re-pair is two joins of those rows instead
+    of a second LSH pipeline over the affected survivors."""
     pairs = stage_fanout(minhash_lsh_neardup(docs).select("doc_a", "doc_b"))
     labels = neardup_clusters(docs, pairs)
     return neardup_clusters_retract(
-        docs, deleted, labels, standing_pairs=pairs
+        docs, tombstoned(docs.select("doc_id")), labels, standing_pairs=pairs
     )
 
 
@@ -1890,9 +1681,7 @@ def neardup_clusters_retract_fixture(docs: DataFrame) -> DataFrame:
 # and the singleton-completion `FROM documents d`; a pytest pins that
 # no bare `documents` scan survives the rewrite).
 NEARDUP_CLUSTERS_RETRACT_SQL = f"""
-WITH RECURSIVE survivors AS (
-  SELECT * FROM documents WHERE doc_id % {RETRACT_MOD} <> 0
-),
+WITH RECURSIVE {SURVIVORS_CTE},
 {_CLUSTERS_CTES.replace("FROM documents", "FROM survivors")}
 SELECT a.doc_id, a.canonical_id, s.cluster_size
 FROM allc a JOIN csizes s USING (canonical_id)
@@ -1921,18 +1710,16 @@ def neardup_pairs_retract(
 
 
 def neardup_pairs_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every RETRACT_MOD-th doc_id; the
-    standing pair table derives in-call (persisted in production)."""
-    deleted = docs.select("doc_id").where(F.col("doc_id") % RETRACT_MOD == 0)
+    """Fixture face: the shared delete batch; the standing pair table
+    derives in-call (persisted in production)."""
+    deleted = tombstoned(docs.select("doc_id"))
     return neardup_pairs_retract(minhash_lsh_neardup(docs), deleted).orderBy(
         "doc_a", "doc_b"
     )
 
 
 NEARDUP_PAIRS_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 {_MINHASH_PAIRS_CTES.replace("FROM documents", "FROM survivors")}
 SELECT doc_a, doc_b, jaccard FROM pairs
 """
@@ -1941,132 +1728,152 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 def neardup_clusters_upsert(
     standing_docs: DataFrame,
     standing_labels: DataFrame,
-    changed_docs: DataFrame,
-    deleted_ids: DataFrame,
+    changed_docs: DataFrame | None,
+    deleted_ids: DataFrame | None,
     max_iterations: int = 25,
     standing_sets: DataFrame | None = None,
     standing_bands: DataFrame | None = None,
+    standing_pairs: DataFrame | None = None,
+    validate_contract: bool = False,
 ) -> DataFrame:
-    """Full CDC maintenance of the dedup closure — UPSERTS + DELETES in
-    one batch: a changed document's text changes its shingles, so its
-    old version must leave the closure and its new version re-pair;
-    deletes ride along as pure retractions.
+    """Maintain the near-dup cluster map ``(doc_id, canonical_id,
+    cluster_size)`` under one batch of changed and deleted docs — the
+    one maintenance body of the cluster family; the append delta and
+    the delete retract are calls with one side ``None``.
 
-    FUSED construction (round 14 — previously retract ∘ delta, two
-    iterative propagation loops; the profile showed the loops' fixed
-    job overhead, not re-shingling, dominated the steady-state cost, so
-    the two quotient graphs are now merged and propagation runs ONCE):
+    A changed doc carries its new text under its old id; its old
+    version leaves the closure and its new text re-pairs.  Ids in both
+    batches are deletes.  ``deleted_ids=None`` declares an append-only
+    batch (every changed id is new) and skips the affected-cluster,
+    re-pair and survivor joins; ``changed_docs=None`` declares a pure
+    delete batch and skips the probe.
 
-    1. Affected clusters = clusters containing a deleted or changed id
-       (broadcast-bounded by the batch).  Unaffected clusters whose
-       canonical never touches a new edge pass through with their
-       stored size — the retract discipline.
-    2. One quotient graph over three node kinds: unaffected cluster
-       CANONICALS (each stands for its intact cluster), affected
-       SURVIVORS (raw ids — their cluster must re-form anyway), and
-       CHANGED ids (new text).  Edges: the detector re-run restricted
-       to affected survivors (the retract edge set) plus the delta
-       probe of the changed docs' new text against the surviving
-       corpus, endpoints mapped to their quotient node.
-    3. Min-label propagation over the delta-ACTIVE subgraph only, then
-       unaffected members relabel THROUGH their canonical and sizes
-       recount over touched components only.
+    Construction, propagating once over a quotient graph:
 
-    EXACTNESS: every quotient node id is the min doc id of the member
-    set it stands for (an unaffected canonical is its cluster's min by
-    the standing contract; raw nodes stand for themselves), so the min
-    node id of a merged component IS the min member id — the rebuild's
-    canonical.  Edge completeness: survivor↔survivor pairs not
-    involving affected clusters cannot exist (they would have been
-    cross-cluster standing edges), so the affected re-pair + the
-    changed-doc probe cover exactly the rebuild's edge set that the
-    standing closure does not already encode.  The driver oracle (full
-    rebuild over the upserted corpus), the 3-batch/migration pytests
-    and the hypothesis chains verify the fusion directly.
+    1. Affected clusters contain a deleted or changed id.  Clusters
+       without one keep their membership; each stands as one node, its
+       canonical.
+    2. Affected survivors and changed docs stand for themselves.  Edges
+       are the detector's pairs among affected survivors (the re-pair)
+       plus the changed docs' new text probed against the survivors,
+       with probe endpoints mapped to their quotient node.  No other
+       survivor pair can exist: it would have been a cross-cluster
+       standing edge.
+    3. Min-label propagation over the nodes touching an edge; untouched
+       clusters pass through with their stored size, and sizes recount
+       over touched components only.
 
-    Caller contract: ``changed_docs`` carries the new text under the
-    SAME doc_id; ids also present in ``deleted_ids`` are treated as
-    deletes (the delete wins).
+    Exactness needs the standing contract: ``canonical_id`` is the min
+    member id of its cluster, and the map came from the same detector
+    and threshold.  Then each quotient node id is the min id of the
+    members it stands for, so the min node id of a merged component is
+    the rebuild's canonical.  ``validate_contract=True`` checks the
+    min-id clause with one aggregation (a debug job).
 
-    ``standing_sets`` / ``standing_bands`` (:func:`neardup_standing_index`
-    output — VERDICT r13 item 5) thread the persisted signature tables
-    through both edge sources: the affected re-pair joins persisted
-    rows and the delta probe hits the persisted band index restricted
-    to survivors (doc_id anti-joins — shingles and signatures are
-    per-document).  The changed docs' NEW text is then the only thing
-    shingled: steady state pays O(|changed| + |deleted| + touched
-    clusters), never a corpus re-shingle.
+    Persisted state, each optional: ``standing_sets`` /
+    ``standing_bands`` (:func:`neardup_standing_index` output) make the
+    re-pair and the probe read persisted rows, so only the changed
+    docs' new text is shingled; ``standing_pairs``, the standing
+    verified pair table, makes the re-pair two joins (the detector over
+    a subset equals the standing pairs restricted to it).  Left at
+    ``None``, they derive from ``standing_docs``.
     """
-    deleted = deleted_ids.select("doc_id").distinct()
-    changed = changed_docs.join(deleted, "doc_id", "left_anti")
-    drop = deleted.unionByName(changed.select("doc_id")).distinct()
     lab = standing_labels.select("doc_id", "canonical_id", "cluster_size")
-    affected = lab.join(drop, "doc_id").select("canonical_id").distinct()
-    unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
-    surviving_affected = (
-        lab.join(F.broadcast(affected), "canonical_id")
-        .select("doc_id")
-        .join(drop, "doc_id", "left_anti")
-    )
-    survivors = standing_docs.join(drop, "doc_id", "left_anti")
-
-    # Edge source 1: the detector restricted to affected survivors
-    # (the retract edge set) — persisted rows when supplied.
-    if standing_sets is not None:
-        sets_aff = standing_sets.join(surviving_affected, "doc_id")
-        bands_aff = (
-            standing_bands.join(surviving_affected, "doc_id")
-            if standing_bands is not None
-            else _minhash_bands(sets_aff, MINHASH_N_HASHES, MINHASH_BAND_R)
+    if validate_contract:
+        bad = (
+            lab.groupBy("canonical_id")
+            .agg(F.min("doc_id").alias("mn"))
+            .where(F.col("canonical_id") != F.col("mn"))
+            .count()
         )
-        repair = _verify_jaccard(
-            _band_index_candidates(bands_aff), sets_aff, 0.8
+        if bad:
+            raise ValueError(
+                f"neardup_clusters_upsert: standing_labels violates the "
+                f"canonical-is-cluster-min contract for {bad} cluster(s)"
+            )
+    if changed_docs is None and deleted_ids is None:
+        raise ValueError("neardup_clusters_upsert: empty batch")
+    edges, raw_nodes = [], []
+    unaffected = lab
+    survivors, surv_sets, surv_bands = standing_docs, standing_sets, standing_bands
+    if deleted_ids is not None:
+        deleted = deleted_ids.select("doc_id").distinct()
+        drop = deleted
+        if changed_docs is not None:
+            changed_docs = changed_docs.join(deleted, "doc_id", "left_anti")
+            drop = deleted.unionByName(changed_docs.select("doc_id")).distinct()
+        # Bounded by the batch, so broadcast at any corpus size: the
+        # standing map is probed, never shuffled.
+        affected = lab.join(drop, "doc_id").select("canonical_id").distinct()
+        unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
+        surviving_affected = (
+            lab.join(F.broadcast(affected), "canonical_id")
+            .select("doc_id")
+            .join(drop, "doc_id", "left_anti")
         )
-    else:
-        repair = minhash_lsh_neardup(
-            standing_docs.join(surviving_affected, "doc_id")
+        raw_nodes.append(surviving_affected)
+        if standing_pairs is not None:
+            sa = surviving_affected
+            edges.append(
+                standing_pairs.join(sa.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+                .join(sa.withColumnRenamed("doc_id", "doc_b"), "doc_b")
+                .select("doc_a", "doc_b")
+            )
+        elif standing_sets is not None:
+            sets_aff = standing_sets.join(surviving_affected, "doc_id")
+            bands_aff = (
+                standing_bands.join(surviving_affected, "doc_id")
+                if standing_bands is not None
+                else _minhash_bands(sets_aff, MINHASH_N_HASHES, MINHASH_BAND_R)
+            )
+            edges.append(
+                _verify_jaccard(_band_index_candidates(bands_aff), sets_aff, 0.8)
+                .select("doc_a", "doc_b")
+            )
+        else:
+            edges.append(
+                minhash_lsh_neardup(standing_docs.join(surviving_affected, "doc_id"))
+                .select("doc_a", "doc_b")
+            )
+        if changed_docs is not None:
+            survivors = standing_docs.join(drop, "doc_id", "left_anti")
+            if standing_sets is not None:
+                surv_sets = standing_sets.join(drop, "doc_id", "left_anti")
+            if standing_bands is not None:
+                surv_bands = standing_bands.join(drop, "doc_id", "left_anti")
+    if changed_docs is not None:
+        raw_nodes.append(changed_docs.select("doc_id"))
+        edges.append(
+            minhash_lsh_neardup_delta(
+                survivors,
+                changed_docs,
+                release_cache=True,
+                corpus_sets=surv_sets,
+                corpus_bands=surv_bands,
+            ).select("doc_a", "doc_b")
         )
-    # Edge source 2: the changed docs' NEW text probed against the
-    # surviving corpus (band index anti-joined to survivors).
-    surv_sets = (
-        standing_sets.join(drop, "doc_id", "left_anti")
-        if standing_sets is not None
-        else None
-    )
-    surv_bands = (
-        standing_bands.join(drop, "doc_id", "left_anti")
-        if standing_bands is not None
-        else None
-    )
-    probe = minhash_lsh_neardup_delta(
-        survivors,
-        changed,
-        release_cache=True,
-        corpus_sets=surv_sets,
-        corpus_bands=surv_bands,
-    )
-
-    # Quotient mapping: unaffected members collapse to their canonical;
-    # affected survivors and changed docs stand for themselves.
-    m = unaffected.select("doc_id", F.col("canonical_id").alias("q"))
-    qa = m.select(F.col("doc_id").alias("doc_a"), F.col("q").alias("q_a"))
-    qb = m.select(F.col("doc_id").alias("doc_b"), F.col("q").alias("q_b"))
-    qedges = (
-        repair.select("doc_a", "doc_b")
-        .unionByName(probe.select("doc_a", "doc_b"))
-        .join(qa, "doc_a", "left")
-        .join(qb, "doc_b", "left")
-        .select(
-            F.coalesce("q_a", "doc_a").alias("doc_a"),
-            F.coalesce("q_b", "doc_b").alias("doc_b"),
+    qedges = reduce(DataFrame.unionByName, edges)
+    if changed_docs is not None:
+        # Probe pairs can reach an unaffected member: collapse it to its
+        # cluster's canonical.  Re-pair endpoints are never unaffected.
+        m = unaffected.select("doc_id", "canonical_id")
+        qa = m.select(F.col("doc_id").alias("doc_a"), F.col("canonical_id").alias("q_a"))
+        qb = m.select(F.col("doc_id").alias("doc_b"), F.col("canonical_id").alias("q_b"))
+        qedges = (
+            qedges.join(qa, "doc_a", "left")
+            .join(qb, "doc_b", "left")
+            .select(
+                F.coalesce("q_a", "doc_a").alias("doc_a"),
+                F.coalesce("q_b", "doc_b").alias("doc_b"),
+            )
         )
-        .where(F.col("doc_a") != F.col("doc_b"))
-        .distinct()
+    # Staged once: the active-node union and the loop's edge build each
+    # read it, and unstaged every read re-ran the re-pair and probe.
+    qedges = stage_fanout(
+        qedges.where(F.col("doc_a") != F.col("doc_b")).distinct()
     )
-    # Staged once for the same reason as the delta path: the active
-    # union + the loop's edge build would otherwise re-run the repair
-    # and probe joins per reference (optimization r15).
-    qedges = stage_fanout(qedges)
+    # Propagate only over nodes touching an edge: the standing cluster
+    # population never enters the loop to confirm nothing touched it.
     active = (
         qedges.select(F.col("doc_a").alias("doc_id"))
         .unionByName(qedges.select(F.col("doc_b").alias("doc_id")))
@@ -2075,27 +1882,20 @@ def neardup_clusters_upsert(
     active_labels = neardup_clusters(active, qedges, max_iterations).select(
         F.col("doc_id").alias("q"), F.col("canonical_id").alias("nl")
     )
-
-    # Untouched unaffected clusters (canonical never met a new edge)
-    # pass through with their stored size; everything else recounts
-    # over touched components only — both sides batch-bounded beyond
-    # the one relabel join through the standing map.
-    relabeled_unaff = unaffected.join(active_labels, unaffected.canonical_id == active_labels.q, "left")
-    untouched = relabeled_unaff.where(F.col("nl").isNull()).select(
+    # Clusters whose canonical met no new edge pass through with their
+    # stored size; everything else recounts over touched components.
+    relabeled = unaffected.join(
+        active_labels, unaffected.canonical_id == active_labels.q, "left"
+    )
+    untouched = relabeled.where(F.col("nl").isNull()).select(
         "doc_id", "canonical_id", "cluster_size"
     )
-    touched_unaff = relabeled_unaff.where(F.col("nl").isNotNull()).select(
+    touched_unaff = relabeled.where(F.col("nl").isNotNull()).select(
         "doc_id", F.col("nl").alias("canonical_id")
     )
-    raw_nodes = surviving_affected.unionByName(changed.select("doc_id"))
-    touched_raw = (
-        raw_nodes.join(
-            active_labels, raw_nodes.doc_id == active_labels.q, "left"
-        )
-        .select(
-            raw_nodes.doc_id,
-            F.coalesce("nl", raw_nodes.doc_id).alias("canonical_id"),
-        )
+    raw = reduce(DataFrame.unionByName, raw_nodes)
+    touched_raw = raw.join(active_labels, raw.doc_id == active_labels.q, "left").select(
+        raw.doc_id, F.coalesce("nl", raw.doc_id).alias("canonical_id")
     )
     touched = touched_unaff.unionByName(touched_raw)
     sizes = touched.groupBy("canonical_id").agg(

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from export_oltp_to_olap_spark.operators.diff import RETRACT_MOD, tombstoned
 from export_oltp_to_olap_spark.operators.similarity import (
     PRESCORE_MARGIN,
     _exact_dot,
@@ -374,9 +375,6 @@ SEMDEDUP_THRESHOLD_CURVE_SQL = semdedup_threshold_curve_sql()
 # Delete-aware maintenance — the semantic leg of the retract ladder
 # ---------------------------------------------------------------------------
 
-SEMDEDUP_RETRACT_MOD = 10
-
-
 def semdedup_retract(
     deleted_ids: DataFrame,
     standing_assignment: DataFrame,
@@ -433,22 +431,20 @@ def semdedup_retract(
 
 
 def semdedup_retract_fixture(embeddings: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every SEMDEDUP_RETRACT_MOD-th vec_id
-    (which includes centroid vectors 0 and 10 of the first-16 frame —
-    the frozen-centroid contract is exercised, not assumed); the
-    assignment table and standing map derive in-call (persisted
-    artifacts in production)."""
+    """Fixture face: the shared delete batch over vec_id (which includes
+    centroid vectors 0 and 10 of the first-16 frame — the
+    frozen-centroid contract is exercised, not assumed); the assignment
+    table and standing map derive in-call (persisted artifacts in
+    production)."""
     assigned = _staged_assignment(embeddings, SEMDEDUP_CENTROIDS, "first")
-    deleted = embeddings.select("vec_id").where(
-        F.col("vec_id") % SEMDEDUP_RETRACT_MOD == 0
-    )
+    deleted = tombstoned(embeddings.select("vec_id"), "vec_id")
     return semdedup_retract(deleted, assigned, semantic_dedup(embeddings))
 
 
 def semdedup_retract_sql(
     n_centroids: int = SEMDEDUP_CENTROIDS,
     threshold: float = SEMDEDUP_THRESHOLD,
-    mod: int = SEMDEDUP_RETRACT_MOD,
+    mod: int = RETRACT_MOD,
 ) -> str:
     """The rebuild-with-frozen-centroids statement over the survivors:
     the shared assignment CTEs with the MEMBER side restricted to the
@@ -461,7 +457,7 @@ def semdedup_retract_sql(
     # ValueError, not assert: this anchor pin executes at module import
     # (SEMDEDUP_RETRACT_SQL below), where a bare assert vanishes under
     # python -O and would otherwise break every import of the module
-    # rather than just this oracle (ADVICE r13).
+    # rather than just this oracle.
     if assignment.count(anchor) != 1:
         raise ValueError(
             "semdedup_retract_sql: the survivors-join anchor must appear "

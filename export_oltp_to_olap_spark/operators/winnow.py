@@ -52,6 +52,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.functions.text import word_shingles
+from export_oltp_to_olap_spark.operators.diff import (
+    DELTA_CUT_FRACTION,
+    SURVIVORS_CTE,
+    split_at_cut,
+    tombstoned,
+)
 from export_oltp_to_olap_spark.operators.partitioning import spread_for_compute
 
 # Fixture constants: k-gram width matches the decontamination fixture
@@ -364,18 +370,10 @@ candidates AS (
 """.strip()
 
 
-DELTA_CUT_FRACTION = 0.9  # registered face: ids above 90 % of max = delta
-
-
 def fingerprint_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max (the
-    `incremental_corpus_delta` convention); standing fingerprints are
-    derived in-call here, persisted in production."""
-    cut = docs.agg(
-        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
-    old_docs = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; standing fingerprints
+    derive in-call (persisted in production)."""
+    old_docs, new_docs = split_at_cut(docs)
     return fingerprint_delta_report(new_docs, standing_fingerprints(old_docs))
 
 
@@ -532,24 +530,19 @@ def streaming_fingerprints(
 
 
 # ---------------------------------------------------------------------------
-# Delete maintenance of the standing fingerprint table (VERDICT r13
-# item 6)
+# Delete maintenance of the standing fingerprint table
 # ---------------------------------------------------------------------------
-
-WINNOW_RETRACT_MOD = 10  # the delete ladder's shared tombstone convention
 
 
 def winnow_fingerprints_retract(
     deleted_ids: DataFrame, standing_fph: DataFrame
 ) -> DataFrame:
-    """Delete/tombstone maintenance of the persisted ``(doc_id,
-    fp_hash)`` side table the delta path probes (`standing_fingerprints`
-    — VERDICT r13 item 6): winnowing is per-document, so deletes remove
-    exactly the tombstoned docs' rows — one doc_id anti-join, the
-    `neardup_pairs_retract` convention.  No re-fingerprinting, no
-    window re-evaluation; the driver oracle (the full winnowing
-    pipeline over the surviving corpus) hash-checks anti-join ≡
-    re-fingerprint directly."""
+    """Delete maintenance of the persisted ``(doc_id, fp_hash)`` side
+    table the delta path probes (`standing_fingerprints`): winnowing is
+    per-document, so deletes remove exactly the tombstoned docs' rows —
+    one doc_id anti-join, no re-fingerprinting.  The oracle (the full
+    winnowing pipeline over the survivors) checks anti-join ≡
+    re-fingerprint."""
     d = deleted_ids.select("doc_id").distinct()
     return standing_fph.join(d, "doc_id", "left_anti").orderBy(
         "doc_id", "fp_hash"
@@ -557,13 +550,12 @@ def winnow_fingerprints_retract(
 
 
 def winnow_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every WINNOW_RETRACT_MOD-th doc_id; the
-    standing fingerprint table derives in-call (persisted and appended
-    per batch in production)."""
-    deleted = docs.select("doc_id").where(
-        F.col("doc_id") % WINNOW_RETRACT_MOD == 0
+    """Fixture face: the shared delete batch; the standing fingerprint
+    table derives in-call (persisted and appended per batch in
+    production)."""
+    return winnow_fingerprints_retract(
+        tombstoned(docs.select("doc_id")), standing_fingerprints(docs)
     )
-    return winnow_fingerprints_retract(deleted, standing_fingerprints(docs))
 
 
 def _winnow_retract_sql() -> str:
@@ -580,9 +572,7 @@ def _winnow_retract_sql() -> str:
         )
     fph_ctes = chain.split(anchor, 1)[0]
     return f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {WINNOW_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 toks AS (
   SELECT doc_id,
          list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),

@@ -122,16 +122,12 @@ SMJ_EXPECTED = frozenset(
         "neardup_threshold_curve",  # the ngram pair verify join at min(t)
         "leakage_safe_splits",  # inherits neardup_clusters' propagation join
         "neardup_clusters",
-        # same final relabel/recount joins as neardup_clusters: the
-        # standing label map and the size table are both corpus-scale
-        # on doc_id/canonical_id, neither broadcastable:
+        # the one upsert body behind all three: standing-map
+        # pass-through/anti joins, edge mapping and the relabel/recount
+        # joins — corpus-scale on doc_id/canonical_id, neither side
+        # broadcastable:
         "neardup_clusters_delta",
-        # the standing-map pass-through/anti joins + the affected-only
-        # re-pair and re-propagation chain — same corpus-scale
-        # doc_id/canonical_id keys as its siblings:
         "neardup_clusters_retract",
-        # the fused quotient propagation plus the same standing-map
-        # pass-through/anti and edge-mapping joins:
         "neardup_clusters_upsert",
         # the ledger legs of the curated retract: keepers/losers joined
         # on text (exact re-election), the pair-table re-key joins and
@@ -233,13 +229,11 @@ STAGE_EXECUTES = frozenset(
         "winnow_recall_audit",
         "decontam_threshold_curve",  # same eager-release pattern
         "fuzzy_decontam_pairs",  # same eager-release pattern
-        # builds standing labels in-call, then iterative quotient
-        # propagation with per-round stage() cuts:
+        # each builds standing labels in-call, then runs the upsert
+        # body's quotient propagation with per-round stage() cuts:
         "neardup_clusters_delta",
-        # same shape in reverse: in-call standing build, then the
-        # affected-only re-pair + propagation with stage() cuts:
         "neardup_clusters_retract",
-        "neardup_clusters_upsert",  # fused retract+delta quotient propagation
+        "neardup_clusters_upsert",
         # in-call standing ledger (stage() cuts) + the retract-chain
         # propagation respectively:
         "curated_retract",

@@ -45,6 +45,12 @@ from export_oltp_to_olap_spark.functions.text import (
     sql_lang_count,
     tokens,
 )
+from export_oltp_to_olap_spark.operators.diff import (
+    DELTA_CUT_FRACTION,
+    SURVIVORS_CTE,
+    split_at_cut,
+    tombstoned,
+)
 from export_oltp_to_olap_spark.operators.neardup import (
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_delta,
@@ -389,23 +395,12 @@ def curated_delta(
     return assign_splits(surviving, "doc_id")
 
 
-DELTA_CUT_FRACTION = 0.9  # registered face: ids above 90 % of max = delta
-
-
 def incremental_corpus_delta(docs: DataFrame) -> DataFrame:
-    """Registered face of :func:`curated_delta` over the fixture corpus:
-    old = ids ≤ ⌊0.9·max⌋, delta = the rest (satisfying the append-only
-    precondition by construction).  The oracle is the FULL-rebuild
-    curation SQL restricted to delta ids — the incremental ≡ rebuild
-    claim itself, the same oracle shape as ``scd2_incremental_merge``."""
-    cut = docs.agg(
-        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id"))
-        .cast("long")
-        .alias("cut")
-    )
-    with_cut = docs.crossJoin(F.broadcast(cut))
-    old = with_cut.where(F.col("doc_id") <= F.col("cut")).drop("cut")
-    delta = with_cut.where(F.col("doc_id") > F.col("cut")).drop("cut")
+    """Registered face of :func:`curated_delta` over the shared append
+    batch (`split_at_cut`, which satisfies the append-only precondition
+    by construction).  The oracle is the full-rebuild curation SQL
+    restricted to delta ids — the incremental ≡ rebuild claim itself."""
+    old, delta = split_at_cut(docs)
     return (
         curated_delta(old, delta)
         .select("doc_id", "quality", "split")
@@ -881,9 +876,6 @@ NEARDUP_QUALITY_KEEPERS_SQL = _quality_keepers_sql()
 # kept set only grows by re-admissions and shrinks by deletions — both
 # scoped to the batch.
 
-CURATED_RETRACT_MOD = 10  # the ladder's shared tombstone fixture convention
-
-
 def curation_standing_ledger(
     old_docs: DataFrame,
     mode: str | None = None,
@@ -1073,19 +1065,14 @@ def _curated_retract_state(
 
 
 def curated_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Registered face: tombstone every CURATED_RETRACT_MOD-th doc_id
-    (the ladder's shared convention — at sf0.01 the cut deletes 43
-    curated keepers, including near-dup witnesses whose victims
-    re-enter); the standing ledger derives in-call (persisted in
-    production).  The ORACLE is the full curation SQL over the
-    surviving corpus, so the driver hash-checks retract ≡
-    rebuild-after-delete directly."""
+    """Registered face: the shared delete batch (`tombstoned` — at
+    sf0.01 it deletes 43 curated keepers, including near-dup witnesses
+    whose victims re-enter); the standing ledger derives in-call
+    (persisted in production).  The oracle is the full curation SQL
+    over the surviving corpus: retract ≡ rebuild-after-delete."""
     base = docs.select("doc_id", "text")
-    deleted = base.select("doc_id").where(
-        F.col("doc_id") % CURATED_RETRACT_MOD == 0
-    )
     keepers, losers, pairs = curation_standing_ledger(base)
-    return curated_retract(deleted, keepers, losers, pairs)
+    return curated_retract(tombstoned(base.select("doc_id")), keepers, losers, pairs)
 
 
 def _curated_retract_sql() -> str:
@@ -1101,9 +1088,7 @@ def _curated_retract_sql() -> str:
             f"in the pipeline CTEs, found {ctes.count(anchor)}"
         )
     return f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {CURATED_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 {ctes.replace(anchor, "FROM survivors")}
 SELECT doc_id, quality, split
 FROM assigned

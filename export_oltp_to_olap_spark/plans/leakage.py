@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from export_oltp_to_olap_spark.operators.diff import SURVIVORS_CTE, tombstoned
 from export_oltp_to_olap_spark.operators.neardup import (
     _CLUSTERS_CTES,
     _MINHASH_PAIRS_CTES,
@@ -190,7 +191,7 @@ SELECT scheme, n_cross_pairs FROM both_schemes ORDER BY scheme
 
 
 # ---------------------------------------------------------------------------
-# Delete-aware cluster-keyed splits (VERDICT r13 item 2, second half)
+# Delete-aware cluster-keyed splits
 # ---------------------------------------------------------------------------
 #
 # The cluster-keyed assignment's split key is the component CANONICAL —
@@ -203,8 +204,6 @@ SELECT scheme, n_cross_pairs FROM both_schemes ORDER BY scheme
 # canonical, hence their split, byte-stable.  That stability trade is the
 # documented one: doc-hash splits never move but leak; cluster-keyed
 # splits are leak-free and move only inside delete-affected families.
-
-SPLIT_RETRACT_MOD = 10  # the delete ladder's shared tombstone convention
 
 
 def leakage_safe_split_retract(
@@ -220,24 +219,21 @@ def leakage_safe_split_retract(
     (`neardup_clusters_retract` does the scoped re-pair/re-election;
     the split is a map-side hash of the resulting canonical).  The
     registered face derives its standing cluster map in-call and
-    tombstones every SPLIT_RETRACT_MOD-th doc_id; the ORACLE is the
+    deletes the shared fixture batch (`tombstoned`); the ORACLE is the
     full cluster + split SQL over the surviving corpus — retract ≡
-    rebuild-after-delete, driver-hashed.
+    rebuild-after-delete.
 
-    In-call bootstrap (optimization r15): the standing-label build
-    already computes the full verified pair table, so it is staged once
-    and threaded into the retract as ``standing_pairs`` — the scoped
-    re-pair becomes two joins of those rows instead of a second LSH
-    pipeline (shingle→sign→band→verify) over the affected survivors.
-    Steady state instead passes the persisted ``standing_labels`` +
-    ``standing_sets``/``standing_bands`` (`neardup_standing_index`
-    rows, the clusters-retract [standing] convention) and the timed
-    plan is the affected-scope joins + re-propagation only.
+    In-call bootstrap: the standing-label build already computes the
+    full verified pair table, so it is staged once and threaded into
+    the retract as ``standing_pairs`` — the scoped re-pair becomes two
+    joins of those rows instead of a second LSH pipeline over the
+    affected survivors.  Steady state instead passes the persisted
+    ``standing_labels`` + ``standing_sets``/``standing_bands``
+    (`neardup_standing_index` rows) and the plan is the affected-scope
+    joins + re-propagation only.
     """
     if deleted_ids is None:
-        deleted_ids = documents.select("doc_id").where(
-            F.col("doc_id") % SPLIT_RETRACT_MOD == 0
-        )
+        deleted_ids = tombstoned(documents.select("doc_id"))
     standing_pairs = None
     if standing_labels is None:
         standing_pairs = stage_fanout(
@@ -260,9 +256,7 @@ def leakage_safe_split_retract(
 
 
 LEAKAGE_SPLIT_RETRACT_SQL = f"""
-WITH RECURSIVE survivors AS (
-  SELECT * FROM documents WHERE doc_id % {SPLIT_RETRACT_MOD} <> 0
-),
+WITH RECURSIVE {SURVIVORS_CTE},
 {_CLUSTERS_CTES.replace("FROM documents", "FROM survivors")}
 SELECT a.doc_id, a.canonical_id, {_split_case("a.canonical_id")} AS split
 FROM allc a

@@ -22,6 +22,12 @@ from export_oltp_to_olap_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from export_oltp_to_olap_spark.operators.diff import (
+    SURVIVORS_CTE,
+    maintain_monoid,
+    split_at_cut,
+    tombstoned,
+)
 from export_oltp_to_olap_spark.operators.partitioning import spread_for_compute
 
 
@@ -461,9 +467,6 @@ ORDER BY source, doc_count DESC, gram
 """.strip()
 
 
-BOILERPLATE_DELTA_CUT_FRACTION = 0.9  # fixture delta convention
-
-
 def boilerplate_ngrams_delta(
     new_docs: DataFrame,
     standing_counts: DataFrame,
@@ -471,44 +474,24 @@ def boilerplate_ngrams_delta(
     n: int = 2,
     top_k: int = BOILERPLATE_TOP_K,
 ) -> DataFrame:
-    """`boilerplate_ngrams` for an append-only delta batch against the
-    PERSISTED standing count tables (`_boilerplate_counts` output) —
-    incremental ≡ full rebuild EXACTLY, because per-(source, gram)
-    document counts and per-source totals are commutative monoids: the
-    merged table is standing + delta by SUM, nothing re-tokenizes the
-    standing corpus.  Steady-state cost is O(|delta|) gram fan-out +
-    one count merge keyed like the standing table.
-    """
+    """`boilerplate_ngrams` for an append-only batch against the
+    persisted standing tables (`_boilerplate_counts` output): gram doc
+    counts and per-source totals are sums, so the merge is exact and
+    nothing re-tokenizes the standing corpus."""
     d_counts, d_totals = _boilerplate_counts(new_docs, n)
-    counts = (
-        standing_counts.unionByName(d_counts)
-        .groupBy("source", "gram")
-        .agg(F.sum("doc_count").alias("doc_count"))
+    return _boilerplate_rank(
+        maintain_monoid(standing_counts, ["source", "gram"], ["doc_count"], added=d_counts),
+        maintain_monoid(standing_totals, ["source"], ["n_docs"], added=d_totals),
+        top_k,
     )
-    totals = (
-        standing_totals.unionByName(d_totals)
-        .groupBy("source")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
-    return _boilerplate_rank(counts, totals, top_k)
 
 
 def boilerplate_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max (the
-    `incremental_corpus_delta` convention); the standing tables are
-    derived in-call here and persisted in production.  Because the
-    count merge is exact, the ORACLE is the full-rebuild SQL itself —
-    the incremental ≡ rebuild claim stated directly."""
-    cut = docs.agg(
-        F.floor(F.lit(BOILERPLATE_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; the standing tables derive
+    in-call (persisted in production).  Oracle = the full-rebuild SQL."""
+    standing, new_docs = split_at_cut(docs)
     sc, st = _boilerplate_counts(standing)
     return boilerplate_ngrams_delta(new_docs, sc, st)
-
-
-BOILERPLATE_RETRACT_MOD = 10  # the delete ladder's shared convention
 
 
 def boilerplate_ngrams_retract(
@@ -518,61 +501,28 @@ def boilerplate_ngrams_retract(
     n: int = 2,
     top_k: int = BOILERPLATE_TOP_K,
 ) -> DataFrame:
-    """Delete/tombstone maintenance of the standing boilerplate tables
-    (VERDICT r13 item 6): per-(source, gram) document counts and
-    per-source totals are commutative monoids and a doc contributes to
-    each of its distinct grams once — deletes SUBTRACT the tombstoned
-    docs' own gram rows and totals; grams (and sources) reaching zero
-    leave their tables (`vocab_df_retract`'s convention).  Steady
-    state: gram fan-out over the |deleted| docs, two keyed merges."""
+    """Delete maintenance of the standing boilerplate tables: a doc
+    counts once per distinct gram, so deletes subtract the tombstoned
+    docs' own gram rows and totals; grams and sources reaching zero
+    leave.  Tokenizes the deleted docs only."""
     d_counts, d_totals = _boilerplate_counts(deleted_docs, n)
-    counts = (
-        standing_counts.join(
-            d_counts.select(
-                "source", "gram", F.col("doc_count").alias("rm")
-            ),
-            ["source", "gram"],
-            "left",
-        )
-        .select(
-            "source",
-            "gram",
-            (F.col("doc_count") - F.coalesce(F.col("rm"), F.lit(0)))
-            .cast("long")
-            .alias("doc_count"),
-        )
-        .where(F.col("doc_count") > 0)
+    return _boilerplate_rank(
+        maintain_monoid(standing_counts, ["source", "gram"], ["doc_count"], removed=d_counts),
+        maintain_monoid(standing_totals, ["source"], ["n_docs"], removed=d_totals),
+        top_k,
     )
-    totals = (
-        standing_totals.join(
-            d_totals.select("source", F.col("n_docs").alias("rm")),
-            "source",
-            "left",
-        )
-        .select(
-            "source",
-            (F.col("n_docs") - F.coalesce(F.col("rm"), F.lit(0)))
-            .cast("long")
-            .alias("n_docs"),
-        )
-        .where(F.col("n_docs") > 0)
-    )
-    return _boilerplate_rank(counts, totals, top_k)
 
 
 def boilerplate_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every BOILERPLATE_RETRACT_MOD-th doc_id;
-    standing tables derive in-call (persisted in production).  ORACLE =
-    the full-rebuild SQL over the survivors."""
-    deleted = docs.where(F.col("doc_id") % BOILERPLATE_RETRACT_MOD == 0)
+    """Fixture face: the shared delete batch; standing tables derive
+    in-call (persisted in production).  Oracle = the full-rebuild SQL
+    over the survivors."""
     sc, st = _boilerplate_counts(docs)
-    return boilerplate_ngrams_retract(deleted, sc, st)
+    return boilerplate_ngrams_retract(tombstoned(docs), sc, st)
 
 
 BOILERPLATE_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {BOILERPLATE_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 {BOILERPLATE_NGRAMS_SQL.replace("FROM documents", "FROM survivors").removeprefix("WITH ")}
 """.strip()
 
@@ -1585,89 +1535,48 @@ def _spectrum_finish(counts: DataFrame) -> DataFrame:
 def doc_length_spectrum_delta(
     new_docs: DataFrame, standing_counts: DataFrame
 ) -> DataFrame:
-    """`doc_length_spectrum` for an append-only delta batch against the
-    PERSISTED standing count table — incremental ≡ full rebuild
-    EXACTLY (per-(source, bucket) doc counts and token sums are
-    commutative monoids; the merged table is standing + delta by SUM,
-    nothing re-tokenizes the standing corpus).  Steady state is
-    O(|delta|) map-side bucketing + one merge keyed like the standing
-    table — the `boilerplate_ngrams_delta` discipline applied to the
-    data-card spectrum, so the card refreshes per ingest batch instead
-    of per full corpus pass."""
-    merged = (
-        standing_counts.unionByName(_doc_length_counts(new_docs))
-        .groupBy("source", "len_bucket")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
+    """`doc_length_spectrum` for an append-only batch against the
+    persisted standing count table: per-(source, bucket) doc counts and
+    token sums merge exactly by SUM; only the batch is tokenized."""
+    return _spectrum_finish(
+        maintain_monoid(
+            standing_counts,
+            ["source", "len_bucket"],
+            ["n_docs", "n_tokens"],
+            added=_doc_length_counts(new_docs),
         )
     )
-    return _spectrum_finish(merged)
-
-
-DOC_LENGTH_DELTA_CUT_FRACTION = 0.9
 
 
 def doc_length_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max (the
-    `incremental_corpus_delta` convention); the standing table derives
-    in-call here, persists in production.  Because the merge is exact,
-    the ORACLE is the full-rebuild SQL itself — incremental ≡ rebuild
-    stated directly, hash-checked by the driver."""
-    cut = docs.agg(
-        F.floor(
-            F.lit(DOC_LENGTH_DELTA_CUT_FRACTION) * F.max("doc_id")
-        ).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; the standing table derives
+    in-call (persisted in production).  Oracle = the full-rebuild SQL."""
+    standing, new_docs = split_at_cut(docs)
     return doc_length_spectrum_delta(new_docs, _doc_length_counts(standing))
-
-
-DOC_LENGTH_RETRACT_MOD = 10  # the delete ladder's shared tombstone convention
 
 
 def doc_length_spectrum_retract(
     deleted_docs: DataFrame, standing_counts: DataFrame
 ) -> DataFrame:
-    """Delete/tombstone maintenance of the standing length spectrum
-    (VERDICT r13 item 6): per-(source, bucket) doc counts and token
-    sums are commutative monoids and each doc contributes to exactly
-    one bucket — deletes SUBTRACT the tombstoned docs' own bucket rows,
-    and buckets whose doc count reaches zero leave the table
-    (`vocab_df_retract`'s exact convention).  Steady state tokenizes
-    the |deleted| docs only; one merge keyed like the standing table."""
-    removed = _doc_length_counts(deleted_docs).select(
-        "source",
-        "len_bucket",
-        F.col("n_docs").alias("docs_rm"),
-        F.col("n_tokens").alias("toks_rm"),
-    )
-    merged = (
-        standing_counts.join(removed, ["source", "len_bucket"], "left")
-        .select(
-            "source",
-            "len_bucket",
-            (F.col("n_docs") - F.coalesce(F.col("docs_rm"), F.lit(0)))
-            .cast("long")
-            .alias("n_docs"),
-            (F.col("n_tokens") - F.coalesce(F.col("toks_rm"), F.lit(0)))
-            .cast("long")
-            .alias("n_tokens"),
+    """Delete maintenance of the standing length spectrum: each doc
+    counts in exactly one bucket, so deletes subtract the tombstoned
+    docs' own bucket rows, and buckets whose doc count reaches zero
+    leave.  Tokenizes the deleted docs only."""
+    return _spectrum_finish(
+        maintain_monoid(
+            standing_counts,
+            ["source", "len_bucket"],
+            ["n_docs", "n_tokens"],
+            removed=_doc_length_counts(deleted_docs),
         )
-        .where(F.col("n_docs") > 0)
     )
-    return _spectrum_finish(merged)
 
 
 def doc_length_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every DOC_LENGTH_RETRACT_MOD-th doc_id;
-    the standing count table derives in-call (persisted in
-    production).  The subtraction is exact, so the ORACLE is the
-    full-rebuild SQL over the survivors — retract ≡ rebuild,
-    hash-checked by the driver."""
-    deleted = docs.where(F.col("doc_id") % DOC_LENGTH_RETRACT_MOD == 0)
-    return doc_length_spectrum_retract(deleted, _doc_length_counts(docs))
+    """Fixture face: the shared delete batch; the standing count table
+    derives in-call (persisted in production).  Oracle = the
+    full-rebuild SQL over the survivors."""
+    return doc_length_spectrum_retract(tombstoned(docs), _doc_length_counts(docs))
 
 
 DOC_LENGTH_SPECTRUM_SQL = f"""
@@ -1696,9 +1605,7 @@ ORDER BY source, len_bucket
 
 
 DOC_LENGTH_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {DOC_LENGTH_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 {DOC_LENGTH_SPECTRUM_SQL.replace("FROM documents", "FROM survivors").removeprefix("WITH ")}
 """.strip()
 
@@ -1872,37 +1779,19 @@ def vocab_df_counts(docs: DataFrame) -> DataFrame:
 
 
 def vocab_df_delta(new_docs: DataFrame, standing_df: DataFrame) -> DataFrame:
-    """`vocab_df_counts` for an append-only delta batch against the
-    PERSISTED standing table — incremental ≡ full rebuild EXACTLY:
-    per-token distinct-doc counts are commutative monoids under
-    append-only ingest (a doc contributes to each of its tokens once,
-    ever), so the merged table is standing + delta by SUM and nothing
-    re-tokenizes the standing corpus.  The `boilerplate_ngrams_delta` /
-    `doc_length_spectrum_delta` discipline applied to the vocabulary
-    table, closing the loop on the pruning artifact: the df table the
-    at-ingest gate freezes is itself maintainable per batch at
-    O(|delta|)."""
-    merged = (
-        standing_df.unionByName(vocab_df_counts(new_docs))
-        .groupBy("tok")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    return merged.orderBy("tok")
-
-
-VOCAB_DF_DELTA_CUT_FRACTION = 0.9
+    """`vocab_df_counts` for an append-only batch against the persisted
+    standing table: a doc counts once per token, ever, so per-token
+    distinct-doc counts merge exactly by SUM and only the batch is
+    tokenized."""
+    return maintain_monoid(
+        standing_df, ["tok"], ["df"], added=vocab_df_counts(new_docs)
+    ).orderBy("tok")
 
 
 def vocab_df_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90% of max; standing derives
-    in-call (persists in production).  The merge is exact, so the
-    ORACLE is the full-rebuild SQL — incremental ≡ rebuild stated
-    directly, hash-checked by the driver."""
-    cut = docs.agg(
-        F.floor(F.lit(VOCAB_DF_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; standing derives in-call
+    (persisted in production).  Oracle = the full-rebuild SQL."""
+    standing, new_docs = split_at_cut(docs)
     return vocab_df_delta(new_docs, vocab_df_counts(standing))
 
 
@@ -1918,50 +1807,24 @@ ORDER BY tok
 """.strip()
 
 
-# Deleted-doc fixture convention shared with neardup.RETRACT_MOD: every
-# RETRACT_MOD-th doc_id is tombstoned.
-VOCAB_RETRACT_MOD = 10
-
-
 def vocab_df_retract(deleted_docs: DataFrame, standing_df: DataFrame) -> DataFrame:
-    """Delete/tombstone maintenance of the standing vocabulary table
-    (VERDICT r12 item 3's ladder, beyond the cluster map): per-token
-    distinct-doc counts are commutative monoids, and a doc contributes
-    to each of its tokens exactly once — so deletes SUBTRACT the
-    tombstoned docs' own df counts, and tokens reaching zero leave the
-    vocabulary.  Exact with no ordering precondition; retract ≡
-    rebuild-over-survivors is the driver-hashed oracle statement.
-
-    Steady-state cost: tokenize the |deleted| docs, one token-keyed
-    join against the standing table (partitioned at corpus scale,
-    never collected, like the delta face's merge)."""
-    removed = vocab_df_counts(deleted_docs).withColumnRenamed("df", "df_rm")
-    return (
-        standing_df.join(removed, "tok", "left")
-        .select(
-            "tok",
-            (F.col("df") - F.coalesce(F.col("df_rm"), F.lit(0)))
-            .cast("long")
-            .alias("df"),
-        )
-        .where(F.col("df") > 0)
-        .orderBy("tok")
-    )
+    """Delete maintenance of the standing vocabulary table: deletes
+    subtract the tombstoned docs' own df counts and tokens reaching
+    zero leave.  Exact with no ordering precondition; oracle = the
+    full-rebuild SQL over the survivors."""
+    return maintain_monoid(
+        standing_df, ["tok"], ["df"], removed=vocab_df_counts(deleted_docs)
+    ).orderBy("tok")
 
 
 def vocab_df_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every VOCAB_RETRACT_MOD-th doc_id;
-    standing table derives in-call (persisted in production).  The
-    subtraction is exact, so the ORACLE is the full-rebuild SQL over
-    the survivors — retract ≡ rebuild hash-checked by the driver."""
-    deleted = docs.where(F.col("doc_id") % VOCAB_RETRACT_MOD == 0)
-    return vocab_df_retract(deleted, vocab_df_counts(docs))
+    """Fixture face: the shared delete batch; standing table derives
+    in-call (persisted in production)."""
+    return vocab_df_retract(tombstoned(docs), vocab_df_counts(docs))
 
 
 VOCAB_DF_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {VOCAB_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 toks AS (
   SELECT DISTINCT doc_id, unnest({SQL_TOKENS.format(t="text")}) AS tok
   FROM survivors
@@ -2340,19 +2203,10 @@ def source_novelty_delta(
     return _novelty_finish(standing_counts.unionByName(delta_counts))
 
 
-NOVELTY_DELTA_CUT_FRACTION = 0.9
-
-
 def source_novelty_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max; standing state
-    derives in-call (persists in production).  The merge is exact, so
-    the ORACLE is the full-rebuild SQL — incremental ≡ rebuild
-    hash-checked directly by the driver."""
-    cut = docs.agg(
-        F.floor(F.lit(NOVELTY_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
-    )
-    standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
-    new_docs = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
+    """Fixture face: the shared append batch; standing state derives
+    in-call (persisted in production).  Oracle = the full-rebuild SQL."""
+    standing, new_docs = split_at_cut(docs)
     return source_novelty_delta(
         new_docs,
         novelty_standing_grams(standing),
@@ -2446,19 +2300,14 @@ def source_novelty_retract(
     return _novelty_finish(adjusted)
 
 
-NOVELTY_RETRACT_MOD = 10
-
-
 def source_novelty_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: tombstone every NOVELTY_RETRACT_MOD-th doc_id;
-    the posting rows and counts derive in-call (persisted artifacts in
-    production).  The re-election is exact, so the ORACLE is the
+    """Fixture face: the shared delete batch; the posting rows and
+    counts derive in-call (persisted in production).  Oracle = the
     full-rebuild novelty SQL over the survivors."""
-    deleted = docs.select("doc_id").where(
-        F.col("doc_id") % NOVELTY_RETRACT_MOD == 0
-    )
     return source_novelty_retract(
-        deleted, _novelty_gram_rows(docs), novelty_standing_counts(docs)
+        tombstoned(docs.select("doc_id")),
+        _novelty_gram_rows(docs),
+        novelty_standing_counts(docs),
     )
 
 
@@ -2490,8 +2339,6 @@ ORDER BY source
 # tombstone filter (pytest pins the rewrite, as for the cluster
 # retract oracle).
 SOURCE_NOVELTY_RETRACT_SQL = f"""
-WITH survivors AS (
-  SELECT * FROM documents WHERE doc_id % {NOVELTY_RETRACT_MOD} <> 0
-),
+WITH {SURVIVORS_CTE},
 {SOURCE_NOVELTY_SQL.split("WITH ", 1)[1].replace("FROM documents", "FROM survivors")}
 """.strip()

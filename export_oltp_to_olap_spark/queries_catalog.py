@@ -385,10 +385,9 @@ def q_winnowing(spark: SparkSession, sf_dir: str):
 
 @register("fingerprint_delta", winnow.FINGERPRINT_DELTA_SQL)
 def q_fingerprint_delta(spark: SparkSession, sf_dir: str):
-    """Incremental winnowing for an append-only delta batch (ids above
-    90% of max) probing the standing fingerprint side table; the oracle
-    is the FULL rebuild restricted to delta ids — incremental ≡ rebuild,
-    the incremental_corpus_delta convention."""
+    """Incremental winnowing of the shared append batch probing the
+    standing fingerprint side table; the oracle is the full rebuild
+    restricted to delta ids — incremental ≡ rebuild."""
     return winnow.fingerprint_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1251,10 +1250,9 @@ def q_curation_audit(spark: SparkSession, sf_dir: str):
 
 @register("incremental_corpus_delta", curation.INCREMENTAL_DELTA_SQL)
 def q_incremental_delta(spark: SparkSession, sf_dir: str):
-    """Incremental curation of an append-only delta batch (ids above
-    90% of max) against the standing corpus; the oracle is the FULL
-    rebuild restricted to delta ids — incremental ≡ rebuild is the
-    driver-checked claim, like scd2_incremental_merge."""
+    """Incremental curation of the shared append batch against the
+    standing corpus; the oracle is the full rebuild restricted to delta
+    ids — incremental ≡ rebuild, like scd2_incremental_merge."""
     return curation.incremental_corpus_delta(_docs(spark, sf_dir))
 
 
@@ -1393,11 +1391,9 @@ def q_media_neardup(spark: SparkSession, sf_dir: str):
 
 @register("media_neardup_delta", media.MEDIA_NEARDUP_DELTA_SQL)
 def q_media_neardup_delta(spark: SparkSession, sf_dir: str):
-    """Daily-ingest media near-dup: pairs touching the append-only
-    delta batch (ids above 90% of max), candidates O(delta x cell
-    occupancy); oracle = full rebuild restricted to delta-touching
-    pairs (incremental == rebuild, the incremental_corpus_delta
-    convention)."""
+    """Daily-ingest media near-dup: pairs touching the shared append
+    batch, candidates O(delta x cell occupancy); oracle = full rebuild
+    restricted to delta-touching pairs (incremental == rebuild)."""
     return media.media_neardup_delta(_docs(spark, sf_dir))
 
 
@@ -1470,11 +1466,9 @@ def q_doc_length_spectrum(spark: SparkSession, sf_dir: str):
 
 @register("doc_length_spectrum_delta", text_queries.DOC_LENGTH_SPECTRUM_SQL)
 def q_doc_length_spectrum_delta(spark: SparkSession, sf_dir: str):
-    """Append-only delta maintenance of the doc-length spectrum: the
-    standing (source, bucket) counts merge with the delta batch by SUM
-    (commutative monoids), so the oracle is the FULL-REBUILD SQL —
-    incremental ≡ rebuild hash-checked directly (the
-    `boilerplate_ngrams_delta` convention)."""
+    """Append-only maintenance of the doc-length spectrum: the standing
+    (source, bucket) counts merge with the delta batch by SUM, so the
+    oracle is the full-rebuild SQL."""
     return text_queries.doc_length_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1509,12 +1503,10 @@ def q_length_outlier_report(spark: SparkSession, sf_dir: str):
 
 @register("pack_bins_delta", chunking.PACK_BINS_SQL)
 def q_pack_bins_delta(spark: SparkSession, sf_dir: str):
-    """Append-only delta maintenance of the GPT-style packing summary:
-    prior docs' bins are immutable under append, the delta batch's
-    offsets are carry + prefix sum, and the (source, bin) counts merge
-    by SUM — so the oracle is the FULL-REBUILD SQL, incremental ≡
-    rebuild hash-checked directly (the boilerplate_ngrams_delta
-    convention applied to sequence packing)."""
+    """Append-only maintenance of the GPT-style packing summary: prior
+    docs' bins are immutable under append, the delta batch's offsets
+    are carry + prefix sum, and the (source, bin) counts merge by SUM —
+    so the oracle is the full-rebuild SQL."""
     return chunking.pack_bins_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1542,12 +1534,9 @@ def q_simhash_recall_audit(spark: SparkSession, sf_dir: str):
 
 @register("vocab_df_delta", text_queries.VOCAB_DF_DELTA_SQL)
 def q_vocab_df_delta(spark: SparkSession, sf_dir: str):
-    """Append-only delta maintenance of the vocabulary df table:
-    per-token distinct-doc counts are commutative monoids, so standing
-    + delta merge by SUM and the oracle is the FULL-REBUILD SQL —
-    incremental ≡ rebuild hash-checked directly (the
-    boilerplate_ngrams_delta convention, applied to the table the
-    vocab-pruning artifact freezes)."""
+    """Append-only maintenance of the vocabulary df table (the table the
+    vocab-pruning artifact freezes): per-token distinct-doc counts merge
+    by SUM, so the oracle is the full-rebuild SQL."""
     return text_queries.vocab_df_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1617,22 +1606,18 @@ def q_cosine_lsh_recall_audit(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_delta", neardup.NEARDUP_CLUSTERS_SQL)
 def q_neardup_clusters_delta(spark: SparkSession, sf_dir: str):
-    """Incremental near-dup CLUSTER maintenance: quotient-graph label
-    propagation absorbs a delta batch into the standing cluster map
+    """Append-only maintenance of the near-dup cluster map: quotient-graph
+    label propagation absorbs a delta batch into the standing map
     (merges decided over |standing clusters| + |delta| nodes, never the
-    corpus).  The oracle is the FULL-REBUILD recursive CTE — the driver
-    hash-checks incremental ≡ rebuild directly (the strongest delta
-    statement, applied to the dedup closure itself)."""
+    corpus).  The oracle is the full-rebuild recursive CTE."""
     return neardup.neardup_clusters_delta_fixture(_docs(spark, sf_dir))
 
 
 @register("source_novelty_delta", text_queries.SOURCE_NOVELTY_SQL)
 def q_source_novelty_delta(spark: SparkSession, sf_dir: str):
-    """Append-only delta maintenance of the novelty profile: first-seen
+    """Append-only maintenance of the novelty profile: first-seen
     attribution is immutable under id-monotone ingest, so the per-source
-    counts merge by SUM and the oracle is the FULL-REBUILD SQL —
-    incremental ≡ rebuild hash-checked directly (the
-    doc_length_spectrum_delta convention applied to novelty)."""
+    counts merge by SUM and the oracle is the full-rebuild SQL."""
     return text_queries.source_novelty_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1677,21 +1662,18 @@ def q_cosine_lsh_multiprobe_recall_audit(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_retract", neardup.NEARDUP_CLUSTERS_RETRACT_SQL)
 def q_neardup_clusters_retract(spark: SparkSession, sf_dir: str):
-    """Delete/tombstone maintenance of the dedup cluster map (VERDICT
-    r12 item 3): the quotient trick in reverse — only clusters
+    """Delete maintenance of the dedup cluster map: only clusters
     containing a deleted doc re-pair and re-propagate (bridge deletes
     split, canonical deletes re-elect the min survivor), every other
-    cluster passes through untouched.  Exact with NO id-monotonicity
-    precondition; the oracle is the FULL-REBUILD recursive CTE over
-    the surviving corpus, so the driver hash-checks retract ≡
-    rebuild-after-delete directly."""
+    cluster passes through untouched.  Exact with no id-ordering
+    precondition; the oracle is the full-rebuild recursive CTE over the
+    surviving corpus."""
     return neardup.neardup_clusters_retract_fixture(_docs(spark, sf_dir))
 
 
 @register("simhash_radius_sweep", neardup.SIMHASH_RADIUS_SWEEP_SQL)
 def q_simhash_radius_sweep(spark: SparkSession, sf_dir: str):
-    """The radius dial on the SimHash family card (VERDICT r12 item 8):
-    per-radius (2/4/6) recall of ≥0.5-Jaccard truth per decile, with
+    """The radius dial on the SimHash family card: per-radius (2/4/6) recall of ≥0.5-Jaccard truth per decile, with
     each radius's band −1 row counting its FALSE POSITIVES (no verify
     stage) — answers "at what hamming radius does SimHash become
     competitive, and at what candidate cost" with one shared pipeline
@@ -1701,18 +1683,16 @@ def q_simhash_radius_sweep(spark: SparkSession, sf_dir: str):
 
 @register("vocab_df_retract", text_queries.VOCAB_DF_RETRACT_SQL)
 def q_vocab_df_retract(spark: SparkSession, sf_dir: str):
-    """Delete/tombstone maintenance of the standing vocabulary table:
-    per-token df counts are monoids, so deletes SUBTRACT the
-    tombstoned docs' own counts and zero-df tokens leave.  One
-    token-keyed join against the persisted table; oracle = the
-    full-rebuild SQL over the survivors (retract ≡ rebuild
-    hash-checked by the driver)."""
+    """Delete maintenance of the standing vocabulary table: deletes
+    subtract the tombstoned docs' own df counts and zero-df tokens
+    leave.  One token-keyed join against the persisted table; oracle =
+    the full-rebuild SQL over the survivors."""
     return text_queries.vocab_df_retract_fixture(_docs(spark, sf_dir))
 
 
 @register("source_novelty_retract", text_queries.SOURCE_NOVELTY_RETRACT_SQL)
 def q_source_novelty_retract(spark: SparkSession, sf_dir: str):
-    """Delete/tombstone maintenance of the novelty profile — first-seen
+    """Delete maintenance of the novelty profile — first-seen
     RE-ELECTION: grams whose introducing doc dies re-attribute to the
     earliest surviving carrier (or vanish with their credit), row
     counts subtract, and only postings touching the delete are read.
@@ -1737,12 +1717,10 @@ def q_lsh_multiprobe_cosine_neardup(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_upsert", neardup.NEARDUP_CLUSTERS_UPSERT_SQL)
 def q_neardup_clusters_upsert(spark: SparkSession, sf_dir: str):
-    """Full CDC maintenance of the dedup closure — upserts + deletes in
-    one batch: retract the old versions (affected clusters
-    split/re-canonicalize), then delta-absorb the changed docs' new
-    text (band probe + quotient propagation).  Oracle = the full
-    rebuild over the upserted corpus, so the driver hash-checks the
-    whole composition directly."""
+    """CDC maintenance of the dedup closure — upserts and deletes in one
+    batch, one propagation: affected clusters split or re-canonicalize
+    while the changed docs' new text re-pairs through the band probe.
+    Oracle = the full rebuild over the upserted corpus."""
     return neardup.neardup_clusters_upsert_fixture(_docs(spark, sf_dir))
 
 
@@ -1781,8 +1759,8 @@ def q_semantic_decontam_pairs(spark: SparkSession, sf_dir: str):
 
 @register("curated_retract", curation.CURATED_RETRACT_SQL)
 def q_curated_retract(spark: SparkSession, sf_dir: str):
-    """The delete-aware ladder applied to the curated corpus ITSELF
-    (VERDICT r13 item 2): deleting an exact-dedup keeper re-admits its
+    """The delete-aware ladder applied to the curated corpus ITSELF:
+    deleting an exact-dedup keeper re-admits its
     min-id surviving twin, deleting a near-dup witness re-admits the
     victims it alone suppressed — all from the persisted ledger
     (keepers, losers, verified pairs), with re-keyed pairs instead of
@@ -1823,10 +1801,9 @@ def q_leakage_split_retract(spark: SparkSession, sf_dir: str):
 
 @register("doc_length_spectrum_retract", text_queries.DOC_LENGTH_RETRACT_SQL)
 def q_doc_length_retract(spark: SparkSession, sf_dir: str):
-    """Monoid leg of the delete ladder (VERDICT r13 item 6): the
-    standing per-(source, bucket) length spectrum under deletes —
-    SUM-subtract of the tombstoned docs' own bucket rows, zero-count
-    buckets leave.  Oracle = the full-rebuild spectrum over the
+    """Monoid leg of the delete ladder: the standing per-(source,
+    bucket) length spectrum under deletes — subtract the tombstoned
+    docs' own bucket rows, zero-count buckets leave.  Oracle = the full-rebuild spectrum over the
     survivors."""
     return text_queries.doc_length_retract_fixture(_docs(spark, sf_dir))
 
@@ -1834,8 +1811,8 @@ def q_doc_length_retract(spark: SparkSession, sf_dir: str):
 @register("boilerplate_ngrams_retract", text_queries.BOILERPLATE_RETRACT_SQL)
 def q_boilerplate_retract(spark: SparkSession, sf_dir: str):
     """Monoid leg of the delete ladder: the standing per-(source, gram)
-    document-frequency tables under deletes — SUM-subtract both the
-    gram counts and the per-source totals, zero rows leave, then the
+    document-frequency tables under deletes — subtract both the gram
+    counts and the per-source totals, zero rows leave, then the
     same top-k rank.  Oracle = the full-rebuild boilerplate SQL over
     the survivors."""
     return text_queries.boilerplate_retract_fixture(_docs(spark, sf_dir))

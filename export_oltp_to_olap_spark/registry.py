@@ -26,15 +26,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Registered:
     fn: QueryFn
     sql: str | None
-    doc: str
 
 
 REGISTRY: dict[str, Registered] = {}
 
 
-def register(name: str, sql: str | None, doc: str = "") -> Callable[[QueryFn], QueryFn]:
+def register(name: str, sql: str | None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = Registered(fn=fn, sql=sql, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = Registered(fn=fn, sql=sql)
         return fn
 
     return deco

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.multimodal import media as M
+from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION
 from export_oltp_to_olap_spark.sources.parquet import load_tables
 
 
@@ -191,7 +192,7 @@ def test_media_neardup_delta_equals_rebuild_restricted(spark, sf001):
 
     docs = spark.read.parquet(f"{sf001}/documents.parquet")
     cut = docs.agg(
-        F.floor(F.lit(M.MEDIA_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
     ).first().c
     full = M.media_histogram_neardup(docs).where(F.col("media_id_b") > cut).collect()
     delta = M.media_neardup_delta(docs).collect()
@@ -206,7 +207,7 @@ def test_media_neardup_delta_standing_mode_equals_bootstrap(spark, sf001):
 
     docs = spark.read.parquet(f"{sf001}/documents.parquet")
     cut = docs.agg(
-        F.floor(F.lit(M.MEDIA_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
     ).first().c
     standing = M.media_byte_histograms(
         M.synthesize_media(docs.where(F.col("doc_id") <= cut))

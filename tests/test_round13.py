@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark import registry
 from export_oltp_to_olap_spark.operators import similarity as S
+from export_oltp_to_olap_spark.operators.diff import RETRACT_MOD
 from export_oltp_to_olap_spark.sources.parquet import load_tables
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -203,7 +204,7 @@ def test_retract_equals_rebuild_after_delete_fixture(spark, sf0001):
 
     docs = load_tables(spark, sf0001, ("documents",))["documents"]
     got = _cluster_map(ND.neardup_clusters_retract_fixture(docs))
-    survivors = docs.where(F.col("doc_id") % ND.RETRACT_MOD != 0)
+    survivors = docs.where(F.col("doc_id") % RETRACT_MOD != 0)
     want = _cluster_map(ND.minhash_neardup_clusters(survivors))
     assert got == want
 
@@ -350,7 +351,7 @@ def test_vocab_df_retract_equals_rebuild(spark, sf0001):
 
     docs = load_tables(spark, sf0001, ("documents",))["documents"]
     got = _rows(TQ.vocab_df_retract_fixture(docs))
-    survivors = docs.where(F.col("doc_id") % TQ.VOCAB_RETRACT_MOD != 0)
+    survivors = docs.where(F.col("doc_id") % RETRACT_MOD != 0)
     want = _rows(TQ.vocab_df_counts(survivors))
     assert got == want
 
@@ -384,7 +385,7 @@ def test_novelty_retract_conservation_law(spark, sf0001):
     docs = load_tables(spark, sf0001, ("documents",))["documents"]
     out = TQ.source_novelty_retract_fixture(docs)
     total_novel = out.agg(F.sum("n_novel")).first()[0]
-    survivors = docs.where(F.col("doc_id") % TQ.NOVELTY_RETRACT_MOD != 0)
+    survivors = docs.where(F.col("doc_id") % RETRACT_MOD != 0)
     n_distinct = (
         TQ._novelty_gram_rows(survivors).select("g").distinct().count()
     )
@@ -443,7 +444,7 @@ def test_semdedup_retract_equals_frozen_centroid_rebuild(spark, sf0001):
     got = _rows(SD.semdedup_retract_fixture(emb))
     assigned = SD._staged_assignment(emb, SD.SEMDEDUP_CENTROIDS, "first")
     survivors = assigned.where(
-        F.col("vec_id") % SD.SEMDEDUP_RETRACT_MOD != 0
+        F.col("vec_id") % RETRACT_MOD != 0
     )
     dup = (
         SD._scored_pairs(survivors, SD.SEMDEDUP_THRESHOLD, None)
@@ -500,7 +501,7 @@ def test_pairs_retract_equals_redetect(spark, sf0001):
 
     docs = load_tables(spark, sf0001, ("documents",))["documents"]
     got = _rows(ND.neardup_pairs_retract_fixture(docs))
-    survivors = docs.where(F.col("doc_id") % ND.RETRACT_MOD != 0)
+    survivors = docs.where(F.col("doc_id") % RETRACT_MOD != 0)
     want = _rows(ND.minhash_lsh_neardup(survivors))
     assert got == want
 

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.operators import neardup
+from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION, RETRACT_MOD
 from export_oltp_to_olap_spark.sources.parquet import load_tables
 
 
@@ -52,7 +53,7 @@ def test_retract_standing_signatures_equivalent(spark, sf001):
     equivalence transitively."""
     docs = _docs(spark, sf001)
     deleted = docs.select("doc_id").where(
-        F.col("doc_id") % neardup.RETRACT_MOD == 0
+        F.col("doc_id") % RETRACT_MOD == 0
     )
     labels = neardup.minhash_neardup_clusters(docs).localCheckpoint()
     sets, bands = neardup.neardup_standing_index(docs)
@@ -78,7 +79,7 @@ def test_delta_standing_signatures_equivalent(spark, sf001):
     docs = _docs(spark, sf001)
     cut = docs.agg(
         F.floor(
-            F.lit(neardup.CLUSTERS_DELTA_CUT_FRACTION) * F.max("doc_id")
+            F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")
         ).alias("c")
     ).first()["c"]
     standing = docs.where(F.col("doc_id") <= cut)
@@ -321,7 +322,7 @@ def test_split_retract_unaffected_components_keep_split(spark, sf001):
         ).collect()
     }
     deleted = docs.select("doc_id").where(
-        F.col("doc_id") % L.SPLIT_RETRACT_MOD == 0
+        F.col("doc_id") % RETRACT_MOD == 0
     )
     affected = {
         r["canonical_id"]

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.operators import neardup
+from export_oltp_to_olap_spark.operators.diff import RETRACT_MOD
 from export_oltp_to_olap_spark.operators.staging import stage, stage_fanout
 from export_oltp_to_olap_spark.plans import curation, leakage
 
@@ -42,7 +43,7 @@ def test_retract_standing_pairs_equivalent(spark, sf001):
     applied to the cluster-retract re-pair)."""
     docs = _docs(spark, sf001)
     deleted = docs.select("doc_id").where(
-        F.col("doc_id") % neardup.RETRACT_MOD == 0
+        F.col("doc_id") % RETRACT_MOD == 0
     )
     pairs = stage_fanout(
         neardup.minhash_lsh_neardup(docs).select("doc_a", "doc_b")
@@ -63,7 +64,7 @@ def test_leakage_split_retract_standing_equivalent(spark, sf001):
     (which is itself driver-hashed against the full rebuild)."""
     docs = _docs(spark, sf001)
     deleted = docs.select("doc_id").where(
-        F.col("doc_id") % leakage.SPLIT_RETRACT_MOD == 0
+        F.col("doc_id") % RETRACT_MOD == 0
     )
     base = _rows(leakage.leakage_safe_split_retract(docs))
     sets, bands = neardup.neardup_standing_index(docs)

@@ -30,6 +30,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.operators import neardup, semdedup, similarity
+from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION
 from export_oltp_to_olap_spark.operators.similarity import (
     centroid_table,
     rank_centroids,
@@ -528,7 +529,7 @@ def test_media_delta_candidates_subquadratic_vs_rebuild(spark):
         from pyspark.sql import functions as F
 
         cut = docs.agg(
-            F.floor(F.lit(M.MEDIA_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
+            F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")).alias("c")
         ).first().c
         rebuild = delta_cand
         touching = (

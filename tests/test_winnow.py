@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.operators import winnow
+from export_oltp_to_olap_spark.operators.diff import DELTA_CUT_FRACTION
 
 K, W = winnow.FINGERPRINT_K, winnow.FINGERPRINT_W
 GUARANTEE = W + K - 1  # tokens: any shared run this long must match
@@ -156,7 +157,7 @@ def test_delta_report_equals_rebuild_restricted(spark, sf001):
     delta ids."""
     docs = spark.read.parquet(f"{sf001}/documents.parquet")
     cut = docs.agg(
-        F.floor(F.lit(winnow.DELTA_CUT_FRACTION) * F.max("doc_id"))
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id"))
     ).collect()[0][0]
     delta = winnow.fingerprint_delta_fixture(docs).collect()
     full = [
@@ -172,7 +173,7 @@ def test_delta_probes_persisted_standing_table(spark, sf001, tmp_path):
     production persist-once/probe-per-batch pattern."""
     docs = spark.read.parquet(f"{sf001}/documents.parquet")
     cut = docs.agg(
-        F.floor(F.lit(winnow.DELTA_CUT_FRACTION) * F.max("doc_id"))
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id"))
     ).collect()[0][0]
     old = docs.where(F.col("doc_id") <= cut)
     new = docs.where(F.col("doc_id") > cut)
