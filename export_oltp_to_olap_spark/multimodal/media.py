@@ -952,11 +952,12 @@ def media_neardup_delta(
     Fixture shape: the shared append batch (ids above `delta_cut`);
     the standing side's histograms are derived in-call here and
     PERSISTED in production (`media_byte_histograms` output is the
-    standing side table, exactly like the winnowing fingerprint table).  Because blocking is
-    deterministic and lossless and the cell cap is computed over the
-    UNION (standing ∪ new — a cell is degenerate-hot no matter which
-    batch its members arrived in), incremental ≡ rebuild-restricted is
-    exact, and the oracle states precisely that claim.
+    standing side table, exactly like the winnowing fingerprint
+    table).  Because blocking is deterministic and lossless and the
+    cell cap is computed over the UNION (standing ∪ new — a cell is
+    degenerate-hot no matter which batch its members arrived in),
+    incremental ≡ rebuild-restricted is exact, and the oracle states
+    precisely that claim.
 
     Scale: per batch, candidate volume is O(new × cell occupancy), not
     O(corpus²) — only cells containing a new item join, and the slim

@@ -196,22 +196,20 @@ SURVIVORS_CTE = f"""survivors AS (
 )"""
 
 
-def delta_cut(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One-row ``(cut)`` frame: ⌊DELTA_CUT_FRACTION · max(id)⌋."""
+def delta_cut(docs: DataFrame) -> DataFrame:
+    """One-row ``(cut)`` frame: ⌊DELTA_CUT_FRACTION · max(doc_id)⌋."""
     return docs.agg(
-        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max(id_col)).alias("cut")
+        F.floor(F.lit(DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
     )
 
 
-def split_at_cut(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
+def split_at_cut(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """``(standing, delta)``: ids at or below :func:`delta_cut`, and the
     ids above it.  Every delta id exceeds every standing id, the
     append-only precondition of the delta faces."""
-    cut = F.broadcast(delta_cut(docs, id_col))
-    standing = docs.join(cut, F.col(id_col) <= F.col("cut")).drop("cut")
-    delta = docs.join(cut, F.col(id_col) > F.col("cut")).drop("cut")
+    cut = F.broadcast(delta_cut(docs))
+    standing = docs.join(cut, F.col("doc_id") <= F.col("cut")).drop("cut")
+    delta = docs.join(cut, F.col("doc_id") > F.col("cut")).drop("cut")
     return standing, delta
 
 

@@ -1745,8 +1745,10 @@ def neardup_clusters_upsert(
     version leaves the closure and its new text re-pairs.  Ids in both
     batches are deletes.  ``deleted_ids=None`` declares an append-only
     batch (every changed id is new) and skips the affected-cluster,
-    re-pair and survivor joins; ``changed_docs=None`` declares a pure
-    delete batch and skips the probe.
+    re-pair and survivor joins; it is not the same as an empty delete
+    frame, which still reads a changed id's old row as an update.
+    ``changed_docs=None`` declares a pure delete batch and skips the
+    probe: only the affected survivors propagate.
 
     Construction, propagating once over a quotient graph:
 
@@ -1768,7 +1770,8 @@ def neardup_clusters_upsert(
     and threshold.  Then each quotient node id is the min id of the
     members it stands for, so the min node id of a merged component is
     the rebuild's canonical.  ``validate_contract=True`` checks the
-    min-id clause with one aggregation (a debug job).
+    min-id clause with one aggregation, and for an append-only batch
+    that no changed id is in the standing map (debug jobs).
 
     Persisted state, each optional: ``standing_sets`` /
     ``standing_bands`` (:func:`neardup_standing_index` output) make the
@@ -1778,6 +1781,8 @@ def neardup_clusters_upsert(
     a subset equals the standing pairs restricted to it).  Left at
     ``None``, they derive from ``standing_docs``.
     """
+    if changed_docs is None and deleted_ids is None:
+        raise ValueError("neardup_clusters_upsert: empty batch")
     lab = standing_labels.select("doc_id", "canonical_id", "cluster_size")
     if validate_contract:
         bad = (
@@ -1791,8 +1796,13 @@ def neardup_clusters_upsert(
                 f"neardup_clusters_upsert: standing_labels violates the "
                 f"canonical-is-cluster-min contract for {bad} cluster(s)"
             )
-    if changed_docs is None and deleted_ids is None:
-        raise ValueError("neardup_clusters_upsert: empty batch")
+        if deleted_ids is None:
+            old = lab.join(changed_docs.select("doc_id"), "doc_id").count()
+            if old:
+                raise ValueError(
+                    f"neardup_clusters_upsert: append-only batch holds {old} "
+                    f"id(s) already in standing_labels; pass deleted_ids"
+                )
     edges, raw_nodes = [], []
     unaffected = lab
     survivors, surv_sets, surv_bands = standing_docs, standing_sets, standing_bands
@@ -1811,6 +1821,11 @@ def neardup_clusters_upsert(
             .select("doc_id")
             .join(drop, "doc_id", "left_anti")
         )
+        if changed_docs is None:
+            # The re-pair and the propagation's label seed both read it,
+            # unstaged each re-probed the standing map.  With a probe in
+            # the batch, staging here measured more jobs, not fewer.
+            surviving_affected = stage(surviving_affected)
         raw_nodes.append(surviving_affected)
         if standing_pairs is not None:
             sa = surviving_affected
@@ -1841,32 +1856,37 @@ def neardup_clusters_upsert(
                 surv_sets = standing_sets.join(drop, "doc_id", "left_anti")
             if standing_bands is not None:
                 surv_bands = standing_bands.join(drop, "doc_id", "left_anti")
-    if changed_docs is not None:
-        raw_nodes.append(changed_docs.select("doc_id"))
-        edges.append(
-            minhash_lsh_neardup_delta(
-                survivors,
-                changed_docs,
-                release_cache=True,
-                corpus_sets=surv_sets,
-                corpus_bands=surv_bands,
-            ).select("doc_a", "doc_b")
-        )
-    qedges = reduce(DataFrame.unionByName, edges)
-    if changed_docs is not None:
-        # Probe pairs can reach an unaffected member: collapse it to its
-        # cluster's canonical.  Re-pair endpoints are never unaffected.
-        m = unaffected.select("doc_id", "canonical_id")
-        qa = m.select(F.col("doc_id").alias("doc_a"), F.col("canonical_id").alias("q_a"))
-        qb = m.select(F.col("doc_id").alias("doc_b"), F.col("canonical_id").alias("q_b"))
-        qedges = (
-            qedges.join(qa, "doc_a", "left")
-            .join(qb, "doc_b", "left")
-            .select(
-                F.coalesce("q_a", "doc_a").alias("doc_a"),
-                F.coalesce("q_b", "doc_b").alias("doc_b"),
+        else:
+            # A pure delete batch adds no edge into an unaffected cluster:
+            # propagate over the affected survivors alone, singletons
+            # included, and pass everything else through.
+            return unaffected.unionByName(
+                neardup_clusters(surviving_affected, edges[0], max_iterations)
             )
+    raw_nodes.append(changed_docs.select("doc_id"))
+    edges.append(
+        minhash_lsh_neardup_delta(
+            survivors,
+            changed_docs,
+            release_cache=True,
+            corpus_sets=surv_sets,
+            corpus_bands=surv_bands,
+        ).select("doc_a", "doc_b")
+    )
+    # Probe pairs can reach an unaffected member: collapse it to its
+    # cluster's canonical.  Re-pair endpoints are never unaffected.
+    m = unaffected.select("doc_id", "canonical_id")
+    qa = m.select(F.col("doc_id").alias("doc_a"), F.col("canonical_id").alias("q_a"))
+    qb = m.select(F.col("doc_id").alias("doc_b"), F.col("canonical_id").alias("q_b"))
+    qedges = (
+        reduce(DataFrame.unionByName, edges)
+        .join(qa, "doc_a", "left")
+        .join(qb, "doc_b", "left")
+        .select(
+            F.coalesce("q_a", "doc_a").alias("doc_a"),
+            F.coalesce("q_b", "doc_b").alias("doc_b"),
         )
+    )
     # Staged once: the active-node union and the loop's edge build each
     # read it, and unstaged every read re-ran the re-pair and probe.
     qedges = stage_fanout(

@@ -1673,11 +1673,12 @@ def q_neardup_clusters_retract(spark: SparkSession, sf_dir: str):
 
 @register("simhash_radius_sweep", neardup.SIMHASH_RADIUS_SWEEP_SQL)
 def q_simhash_radius_sweep(spark: SparkSession, sf_dir: str):
-    """The radius dial on the SimHash family card: per-radius (2/4/6) recall of ≥0.5-Jaccard truth per decile, with
-    each radius's band −1 row counting its FALSE POSITIVES (no verify
-    stage) — answers "at what hamming radius does SimHash become
-    competitive, and at what candidate cost" with one shared pipeline
-    pass.  Not bench-headline: shares the siblings' exact-truth stage."""
+    """The radius dial on the SimHash family card: per-radius (2/4/6)
+    recall of ≥0.5-Jaccard truth per decile, with each radius's band −1
+    row counting its FALSE POSITIVES (no verify stage) — answers "at
+    what hamming radius does SimHash become competitive, and at what
+    candidate cost" with one shared pipeline pass.  Not bench-headline:
+    shares the siblings' exact-truth stage."""
     return neardup.simhash_radius_sweep(_docs(spark, sf_dir))
 
 
@@ -1803,8 +1804,8 @@ def q_leakage_split_retract(spark: SparkSession, sf_dir: str):
 def q_doc_length_retract(spark: SparkSession, sf_dir: str):
     """Monoid leg of the delete ladder: the standing per-(source,
     bucket) length spectrum under deletes — subtract the tombstoned
-    docs' own bucket rows, zero-count buckets leave.  Oracle = the full-rebuild spectrum over the
-    survivors."""
+    docs' own bucket rows, zero-count buckets leave.  Oracle = the
+    full-rebuild spectrum over the survivors."""
     return text_queries.doc_length_retract_fixture(_docs(spark, sf_dir))
 
 
