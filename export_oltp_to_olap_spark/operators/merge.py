@@ -17,8 +17,9 @@ semantics dependency-free for the harness.
 
 K1 note (ref :406-410): the reference commits all 7 tables in one OLAP
 transaction.  Parquet gives per-table atomicity only; ``merge_star``
-writes dims before facts so readers never see a fact whose FK dimensions
-haven't landed (the same dims-before-facts order as ref :337-345).
+merges the dims concurrently, then the fact once every dim merge has
+succeeded, so readers never see a fact whose FK dimensions haven't
+landed (the dims-before-facts order of ref :337-345).
 """
 
 from __future__ import annotations

@@ -239,6 +239,8 @@ STAGE_EXECUTES = frozenset(
         "curated_retract",
         "curated_upsert",  # retract state + staged stage0/admitted cuts
         "leakage_split_retract",
+        # the fact slice collects the changed order's owner and product ids:
+        "incremental_orden_hecho",
     }
 )
 

@@ -1,8 +1,9 @@
 """Full star-schema build + incremental dispatcher.
 
 Batch mode (ref ``sync_oltp_to_olap.py`` no-args path, SURVEY.md §3.1):
-one lazily-composed Spark plan builds 6 dims + 1 fact; write order is
-dims-before-fact (the reference's FK topological order, ref :337-345).
+one lazily-composed Spark plan builds 6 dims + 1 fact; the dims are
+written concurrently, then the fact — the dims-before-fact edge of the
+reference's FK topological order (ref :337-345).
 
 Incremental mode (ref ``--table/--op/--id`` path, SURVEY.md §3.2): the
 same builders parameterized by a key predicate that Catalyst pushes into
@@ -14,9 +15,10 @@ ref :416-423, SURVEY.md §7.4).
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +33,9 @@ from export_oltp_to_olap_spark.plans.dims import (
 )
 from export_oltp_to_olap_spark.plans.fact import build_hecho_ventas, fact_source
 
-# Write order = FK topological order (ref :337-345, :357-366).
+# FK topological order (ref :337-345, :357-366): the six dims, then the
+# fact.  The dims do not reference each other, so they are written
+# concurrently; the fact is written after all of them.
 STAR_WRITE_ORDER = (
     "dim_cliente",
     "dim_categoria",
@@ -88,9 +92,12 @@ def build_star(
     """Build the whole star from reference-shaped OLTP DataFrames.
 
     RI repair (ref :272-314): after building dims from their own sources,
-    extend dim_categoria / dim_cliente / dim_producto with null-filled
-    placeholders for any FK the fact carries that the dim lacks, so every
-    fact row's FK resolves — set-wise left-anti instead of per-row probes.
+    extend dim_categoria / dim_cliente with null-filled placeholders for
+    any FK the fact carries that the dim lacks, so every fact row's FK
+    resolves — set-wise left-anti instead of per-row probes.  The
+    reference's dim_producto repair (ref :299-310) can never fire here:
+    the fact source inner-joins ``productos`` on ``id_producto`` and
+    dim_producto keeps every distinct ``id_producto``, so it is not built.
 
     ``repair=False`` skips placeholder generation — the dim-only
     incremental path (ref ``_sync_clientes``/``_sync_categorias``/
@@ -122,7 +129,6 @@ def build_star(
         )
         dim_categoria = repair_missing_dims(src, dim_categoria, ["id_categoria"])
         dim_cliente = repair_missing_dims(src, dim_cliente, ["id_cliente"])
-        dim_producto = repair_missing_dims(src, dim_producto, ["id_producto"])
 
     return StarSchema(
         dim_cliente=dim_cliente,
@@ -141,38 +147,44 @@ def build_star(
 # ---------------------------------------------------------------------------
 
 
+def _driver_ids(df: DataFrame, col: str) -> list:
+    """The distinct non-null values of ``col`` in a key-narrowed
+    (micro-batch sized) frame, collected to the driver."""
+    return sorted({r[0] for r in df.select(col).where(F.col(col).isNotNull()).collect()})
+
+
 def _fact_slice(
-    oltp: dict[str, DataFrame], ventas_r: DataFrame, affected_orders: DataFrame
+    oltp: dict[str, DataFrame], ventas_r: DataFrame, order_ids: list
 ) -> dict[str, DataFrame]:
     """Restrict every OLTP input to the slice one set of changed orders
-    touches.  ``productos``/``clientes`` are narrowed by semi-joins so the
+    touches.  ``clientes`` is narrowed to the owners of the affected
+    orders and ``productos`` to the products on their order lines, so the
     dim builders re-emit only affected members — safe for the fact chain
-    because the fact's inner joins can only reach products on affected
-    order lines and customers owning affected orders anyway.  The customer
-    narrowing is the reference's orden→cliente cascade (ref :379-386) done
-    set-wise."""
+    because its inner joins can reach no other customer or product.  The
+    customer narrowing is the reference's orden→cliente cascade (ref
+    :379-386) done set-wise.
+
+    Both id sets come back to the driver in one small collect and narrow
+    by ``isin``, a filter every consumer of the slice (the fact and each
+    RI repair) pushes into its scan."""
+    in_orders = F.col("id_orden").isin(order_ids)
+    touched = (
+        oltp["orden"]
+        .where(in_orders)
+        .select(F.lit("clientes").alias("t"), F.col("id_cliente").alias("id"))
+        .unionByName(
+            oltp["orden_producto"]
+            .where(in_orders)
+            .select(F.lit("productos").alias("t"), F.col("id_producto").alias("id"))
+        )
+        .where(F.col("id").isNotNull())
+        .collect()
+    )
     out = dict(oltp)
     out["ventas"] = ventas_r
-    owners = (
-        oltp["orden"]
-        .join(F.broadcast(affected_orders), on="id_orden", how="left_semi")
-        .select("id_cliente")
-        .where(F.col("id_cliente").isNotNull())
-        .distinct()
-    )
-    out["clientes"] = oltp["clientes"].join(
-        F.broadcast(owners), on="id_cliente", how="left_semi"
-    )
-    affected_products = (
-        oltp["orden_producto"]
-        .join(F.broadcast(affected_orders), on="id_orden", how="left_semi")
-        .select("id_producto")
-        .where(F.col("id_producto").isNotNull())
-        .distinct()
-    )
-    out["productos"] = oltp["productos"].join(
-        F.broadcast(affected_products), on="id_producto", how="left_semi"
-    )
+    for t, key in (("clientes", "id_cliente"), ("productos", "id_producto")):
+        ids = sorted({r["id"] for r in touched if r["t"] == t})
+        out[t] = oltp[t].where(F.col(key).isin(ids))
     return out
 
 
@@ -184,6 +196,8 @@ def filter_oltp_for_keys(
     interpolation (ref :203-208, :220, :232, :250-255).  Catalyst pushes
     the resulting IN-filters into the source scans (JDBC pushdown /
     parquet row-group pruning); CDC micro-batches keep the key sets small.
+    A fact-table slice runs two small collects (the affected order ids,
+    then their owners and products); a dim slice runs none.
 
     Routing (ref :367-404):
       * clientes/categoria/productos → those dimensions' source rows
@@ -207,17 +221,15 @@ def filter_oltp_for_keys(
         out["productos"] = oltp["productos"].where(F.col("id_producto").isin(ids))
     elif t == "ventas":
         ventas_r = oltp["ventas"].where(F.col("id_venta").isin(ids))
-        return _fact_slice(oltp, ventas_r, ventas_r.select("id_orden").distinct())
+        return _fact_slice(oltp, ventas_r, _driver_ids(ventas_r, "id_orden"))
     elif t == "orden":
         ventas_r = oltp["ventas"].where(F.col("id_orden").isin(ids))
-        affected = oltp["orden"].where(F.col("id_orden").isin(ids)).select("id_orden").distinct()
-        return _fact_slice(oltp, ventas_r, affected)
+        orders = oltp["orden"].where(F.col("id_orden").isin(ids))
+        return _fact_slice(oltp, ventas_r, _driver_ids(orders, "id_orden"))
     elif t == "orden_producto":
         pk = resolve_orden_producto_pk(oltp["orden_producto"])
-        parents = (
-            oltp["orden_producto"].where(F.col(pk).isin(ids)).select("id_orden").distinct()
-        )
-        ventas_r = oltp["ventas"].join(F.broadcast(parents), on="id_orden", how="left_semi")
+        parents = _driver_ids(oltp["orden_producto"].where(F.col(pk).isin(ids)), "id_orden")
+        ventas_r = oltp["ventas"].where(F.col("id_orden").isin(parents))
         return _fact_slice(oltp, ventas_r, parents)
     else:
         # unknown table → full sync fallback (ref :402-404)
@@ -304,18 +316,56 @@ def _check_sk_mode(star: StarSchema, target_dir: str, overwrite: bool) -> None:
     _write_star_meta(target_dir, star.sk_mode)
 
 
+def _write_dims_then_fact(
+    star: StarSchema,
+    tables: Sequence[str] | None,
+    write: Callable[[str, DataFrame], None],
+) -> None:
+    """Run ``write(name, df)`` for each selected star table: the
+    dimensions concurrently, one ``InheritableThread`` each, then
+    ``hecho_ventas`` once every dimension thread has finished.
+
+    Parquet gives per-table atomicity only, so the fact is written last
+    and only if every dimension write succeeded: readers never see a fact
+    whose FK dimensions have not landed (K1, ref :337-345, :406-410).  If
+    a dimension write raised, the first error in ``STAR_WRITE_ORDER`` is
+    re-raised and the fact is left as it was.  ``InheritableThread``
+    carries the caller's local properties into each writer — above all
+    its job group, under which a streaming query tracks and cancels a
+    micro-batch's jobs."""
+    names = [n for n in STAR_WRITE_ORDER if tables is None or n in tables]
+    dims = [n for n in names if n != "hecho_ventas"]
+    errors: dict[str, BaseException] = {}
+
+    def write_dim(name: str) -> None:
+        try:
+            write(name, getattr(star, name))
+        except BaseException as exc:  # re-raised on the caller's thread
+            errors[name] = exc
+
+    threads = [InheritableThread(lambda n=name: write_dim(n)) for name in dims]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    for name in dims:
+        if name in errors:
+            raise errors[name]
+    if "hecho_ventas" in names:
+        write("hecho_ventas", star.hecho_ventas)
+
+
 def write_star(
     star: StarSchema, target_dir: str, tables: Sequence[str] | None = None
 ) -> None:
-    """Initial full load: overwrite each OLAP table, dims before fact
-    (the reference's FK topological order, ref :337-345)."""
+    """Initial full load: overwrite each OLAP table, the dims concurrently,
+    then the fact (the reference's FK topological order, ref :337-345)."""
     _check_sk_mode(star, target_dir, overwrite=tables is None)
-    for name in STAR_WRITE_ORDER:
-        if tables is not None and name not in tables:
-            continue
-        getattr(star, name).write.mode("overwrite").parquet(
-            star_table_path(target_dir, name)
-        )
+    _write_dims_then_fact(
+        star,
+        tables,
+        lambda name, df: df.write.mode("overwrite").parquet(star_table_path(target_dir, name)),
+    )
 
 
 def merge_star(
@@ -325,21 +375,21 @@ def merge_star(
     tables: Sequence[str] | None = None,
 ) -> None:
     """Idempotent key-merge of (a slice of) the star into stored targets —
-    the cross-batch ON CONFLICT semantics (ref :56-93, :150-191), dims
-    before fact.  Raises if the stored star was built with a different
-    ``sk_mode`` (key-space mixing guard)."""
+    the cross-batch ON CONFLICT semantics (ref :56-93, :150-191), the dims
+    concurrently, then the fact.  Raises if the stored star was built with
+    a different ``sk_mode`` (key-space mixing guard)."""
+    # Looked up per call, so a wrapper installed on operators.merge (the
+    # benchmark's tracer) sees every table merge.
     from export_oltp_to_olap_spark.operators.merge import merge_into_parquet
 
     _check_sk_mode(star, target_dir, overwrite=False)
-    for name in STAR_WRITE_ORDER:
-        if tables is not None and name not in tables:
-            continue
-        merge_into_parquet(
-            spark,
-            getattr(star, name),
-            star_table_path(target_dir, name),
-            STAR_MERGE_KEYS[name],
-        )
+    _write_dims_then_fact(
+        star,
+        tables,
+        lambda name, df: merge_into_parquet(
+            spark, df, star_table_path(target_dir, name), STAR_MERGE_KEYS[name]
+        ),
+    )
 
 
 def build_star_incremental(

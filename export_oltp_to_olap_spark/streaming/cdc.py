@@ -17,8 +17,11 @@ long-lived streaming query:
   one line because everything downstream sees the same schema.
 * **Batch semantics**: each micro-batch is grouped by table and applied as
   a set-wise incremental rebuild (``filter_oltp_for_keys``) + idempotent
-  key-merge — the reference's one-subprocess-per-event becomes one Spark
-  job per (batch × affected table), independent of event count.
+  key-merge (``merge_star``: the affected dims concurrently, then the
+  fact) — the reference's one-subprocess-per-event becomes a fixed number
+  of Spark jobs per (batch × affected table), independent of event count:
+  about 60 for a 10-key ``orden`` + ``clientes`` micro-batch, most of
+  them the read-modify-write merges of the seven star tables.
 * **Delivery**: checkpointing makes this exactly-once-per-batch — strictly
   stronger than the reference's at-most-once (SURVEY.md §2.I4).  Because
   every merge is an idempotent upsert of *current* OLTP state, replays and

@@ -116,13 +116,26 @@ def test_xxhash_sk_no_collisions(oltp):
 
 
 def test_incremental_slice_subset_of_full(oltp):
-    """Every row the §3.2 incremental rebuild emits for one changed order
-    exists verbatim in the full build (xxhash64 keys make slice and full
-    SKs comparable, SURVEY.md §7.4)."""
+    """Every row the §3.2 incremental rebuild emits — fact and dims — for
+    one changed ventas, orden or orden_producto record exists verbatim in
+    the full build (xxhash64 keys make slice and full SKs comparable,
+    SURVEY.md §7.4).  The fact's products are all ``productos`` members,
+    which is why no dim_producto placeholder repair is built."""
     full = build_star(oltp, sk_mode="xxhash64")
-    inc = build_star_incremental(oltp, "orden", record_id=7, sk_mode="xxhash64")
-    full_rows = {tuple(r) for r in full.hecho_ventas.collect()}
-    inc_rows = [tuple(r) for r in inc.hecho_ventas.collect()]
-    assert inc_rows, "incremental slice for order 7 is empty"
-    missing = [r for r in inc_rows if r not in full_rows]
-    assert not missing, f"{len(missing)} incremental rows not in full build"
+    full_rows = {name: {tuple(r) for r in df.collect()} for name, df in full.tables().items()}
+    product_ids = {r[0] for r in oltp["productos"].select("id_producto").collect()}
+    assert {r[0] for r in full.hecho_ventas.select("id_producto").collect()} <= product_ids
+
+    order = 7
+    venta = oltp["ventas"].where(F.col("id_orden") == order).first()["id_venta"]
+    line = oltp["orden_producto"].where(F.col("id_orden") == order).first()["id_op"]
+    for table, record_id in (("ventas", venta), ("orden", order), ("orden_producto", line)):
+        inc = build_star_incremental(oltp, table, record_id=record_id, sk_mode="xxhash64")
+        for name, df in inc.tables().items():
+            inc_rows = [tuple(r) for r in df.collect()]
+            if name in ("hecho_ventas", "dim_cliente"):
+                assert inc_rows, f"{table}={record_id}: {name} slice is empty"
+            missing = [r for r in inc_rows if r not in full_rows[name]]
+            assert not missing, (
+                f"{table}={record_id}: {len(missing)} {name} slice rows not in full build"
+            )
