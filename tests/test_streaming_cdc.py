@@ -263,16 +263,14 @@ def test_merge_star_jobs_run_under_callers_job_group(spark, oltp, tmp_path):
 
 
 # Jobs one apply_cdc_events call runs on a 7-order + 3-customer batch at
-# the sf0.001 fixture: 60 in every run seen (81 before the dimension
-# repair and the per-consumer semi-joins were dropped).  Counts can move
-# by one or two between runs, so the pin sits two above the highest seen.
+# the sf0.001 fixture: 60 in every run seen.  Counts can move by one or
+# two between runs, so the pin sits two above the highest seen.
 APPLY_CDC_MAX_JOBS = 62
 
 
 def test_apply_cdc_job_count_pinned(spark, oltp, tmp_path):
     """A fact-wide + dim-only micro-batch (the benchmark's oltp_cdc op)
-    stays within a fixed job budget: the slice's owner/product ids are
-    collected once, and no dim_producto repair re-reads the fact source."""
+    stays within a fixed job budget."""
     target = str(tmp_path / "star")
     write_star(build_star(oltp, sk_mode=SK), target)
     orders = [r[0] for r in oltp["orden"].select("id_orden").orderBy("id_orden").limit(7).collect()]
