@@ -396,13 +396,13 @@ def cmd_curate_ledger_init(args: argparse.Namespace, spark: SparkSession) -> int
     keepers' shingle-set side table): keepers, losers, verified
     near-dup pairs, sets.  Run once per corpus; after that,
     ``curate-ledger-apply`` maintains the tables batch-over-batch
-    without ever re-gating or re-shingling the corpus."""
-    from export_oltp_to_olap_spark.operators.neardup import ngram_shingle_sets
+    without ever re-gating or re-shingling the corpus.  The sets table
+    is the one the pair build already staged, so the keepers are
+    shingled once."""
     from export_oltp_to_olap_spark.plans.curation import curation_standing_ledger
 
     docs = spark.read.parquet(args.corpus).select("doc_id", "text")
-    keepers, losers, pairs = curation_standing_ledger(docs)
-    sets = ngram_shingle_sets(keepers.select("doc_id", "text"))
+    keepers, losers, pairs, sets = curation_standing_ledger(docs, return_sets=True)
     counts = {}
     for name, df in (
         ("keepers", keepers),
@@ -428,9 +428,9 @@ def cmd_curate_ledger_apply(args: argparse.Namespace, spark: SparkSession) -> in
     curated output rows (``curated.parquet``: doc_id, quality, split)
     under ``--out``.  Chained applies provably converge to the fresh
     rebuild's ledger (pytest-pinned).  ``--out`` must differ from
-    ``--ledger``: the new tables derive lazily FROM the old ones, so
-    writing over the input would self-truncate mid-read (the
-    read-then-overwrite trap ADVICE r13 flagged on the IVF index)."""
+    ``--ledger``: keepers and pairs come back staged, but losers, sets
+    and the curated rows still derive lazily FROM the input tables, so
+    writing over the input would self-truncate mid-read."""
     from export_oltp_to_olap_spark.plans.curation import curated_upsert_ledger
 
     if os.path.abspath(args.out) == os.path.abspath(args.ledger):

@@ -850,7 +850,7 @@ NEARDUP_QUALITY_KEEPERS_SQL = _quality_keepers_sql()
 
 
 # ---------------------------------------------------------------------------
-# Delete-aware STANDING CURATED corpus (VERDICT r13 item 2)
+# Delete-aware STANDING CURATED corpus
 # ---------------------------------------------------------------------------
 #
 # The retract ladder (clusters, pairs, vocab, novelty, semdedup, IVF)
@@ -896,31 +896,25 @@ def curation_standing_ledger(
     rung `standing_state` persists, staged here exactly once and
     threaded into the pair build, so CDC callers that probe it
     (`curated_upsert`'s ``standing_sets``) share one explicit
-    materialization instead of relying on CacheManager plan-identity
-    between two independently-built plans (optimization r15, VERDICT
-    r14 "what's wrong" #5 — a stray ``.select()`` used to degrade the
-    reuse silently).
+    materialization instead of relying on CacheManager plan identity
+    between two independently-built plans, which a stray ``.select()``
+    silently breaks.
 
-    Staging (optimization r15, measured): the set table is staged once
-    (fan-out cache under the default conf, the artifact mode
-    otherwise) and the pair build consumes it — that removes the
-    second shingle pass the old implicit-cache coupling paid on a
-    plan-identity miss.  The pair table itself stays EAGERLY staged
-    even in-call: leaving it as a live plan (tried this round) fused a
-    ~1,000-node subtree into the consumer's job and Catalyst/AQE
-    re-planning of the giant plan cost more than the staging pass it
-    saved (curated_upsert 9.5 → 11.3 s at sf0.1 — guide §3.3 "planning
-    time itself can become the bottleneck; materialising an
-    intermediate truncates the plan").
+    Staging (measured): the set table is staged once (fan-out cache
+    under the default conf, the artifact mode otherwise) and the pair
+    build consumes it, so the keepers are shingled once.  The pair
+    table itself stays EAGERLY staged even in-call: leaving it as a
+    live plan fused a ~1,000-node subtree into the consumer's job, and
+    Catalyst/AQE re-planning of the giant plan cost more than the
+    staging pass it saved (curated_upsert 9.5 → 11.3 s at sf0.1:
+    materialising an intermediate truncates the plan).
     """
     gated = _gated(old_docs)
     w = Window.partitionBy("text")
     # Materialize the gate+window ONCE: keepers and losers are two
     # filters of the same frame, and staging each branch separately
     # re-ran the whole regex gate chain + the text-partitioned window
-    # per branch (measured ~1.5 s per extra pass at sf0.1 —
-    # optimization r14, guide §2.4 "two operations keyed the same way
-    # share one exchange").
+    # per branch (measured ~1.5 s per extra pass at sf0.1).
     gk = stage_fanout(gated.withColumn("keeper", F.min("doc_id").over(w)))
     keepers = stage(
         gk.where(F.col("doc_id") == F.col("keeper")).select(
@@ -979,10 +973,20 @@ def curated_retract(
     new_deduped, mapped, _succ, _losers = _curated_retract_state(
         deleted_ids, standing_curated, standing_losers, standing_pairs
     )
-    dropped = (
-        mapped.select(F.greatest("na", "nb").alias("doc_id")).distinct()
-    )
-    kept = new_deduped.join(dropped, "doc_id", "left_anti")
+    return _curated_rows(new_deduped, mapped, ends=("na", "nb"))
+
+
+def _curated_rows(
+    keepers: DataFrame,
+    pairs: DataFrame,
+    ends: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """The curated output over a curated-stage keeper table and its
+    verified pair table: the near-dup drop rule (a keeper is dropped
+    when it is the larger end of any pair), then the doc_id hash
+    split — ``(doc_id, quality, split)`` ordered by doc_id."""
+    dropped = pairs.select(F.greatest(*ends).alias("doc_id")).distinct()
+    kept = keepers.join(dropped, "doc_id", "left_anti")
     return (
         assign_splits(kept, "doc_id")
         .select("doc_id", "quality", "split")
@@ -1024,11 +1028,10 @@ def _curated_retract_state(
     new_deduped = kept_keepers.unionByName(readmitted)
 
     # Successor map over dead keepers (succ NULL = text slot died).
-    # Staged (optimization r15): a delete-batch-sized frame whose
-    # lineage re-runs the re-admission group-by + quality regex, and
-    # whose derivatives feed the ma/mb/m BROADCASTS — each broadcast
-    # re-evaluated the subtree separately before staging (guide §2.4
-    # reuse, the same fix as the challenge join above).
+    # Staged: a delete-batch-sized frame whose lineage re-runs the
+    # re-admission group-by + quality regex, and whose derivatives feed
+    # the ma/mb/m BROADCASTS — unstaged, each broadcast re-evaluated
+    # the subtree separately.
     succ = stage(
         dk.join(
             readmitted.select(F.col("doc_id").alias("succ"), "text"), "text"
@@ -1145,12 +1148,11 @@ def curated_upsert(
     the standing curated stage) threads the persisted signatures
     through: re-admissions and demotions RE-KEY existing set rows via
     the two same-text successor maps, so steady state shingles only the
-    admitted batch texts — never the corpus (the VERDICT r13 item-5
-    discipline).  ``None`` (fixture/bootstrap) shingles the stage
-    in-call.  ``standing_prefix`` (optimization r15, VERDICT r14
-    item 3) additionally threads the persisted AllPairs prefix-row
-    table (``_prefix_index`` over ``standing_sets`` at the same
-    threshold): prefix rows are per-document, so they re-key through
+    admitted batch texts — never the corpus.  ``None``
+    (fixture/bootstrap) shingles the stage in-call.
+    ``standing_prefix`` additionally threads the persisted AllPairs
+    prefix-row table (``_prefix_index`` over ``standing_sets`` at the
+    same threshold): prefix rows are per-document, so they re-key through
     the same successor maps and the probe skips re-exploding +
     re-sorting every corpus doc's shingle array per batch.
 
@@ -1161,7 +1163,7 @@ def curated_upsert(
     frame beyond the one standing-stage anti-join is bounded by the
     batch and the clusters/postings it touches.
     """
-    _stage, _pairs, _losers, _sets, kept = _curated_upsert_state(
+    stage_new, pairs_new, _losers, _sets = _curated_upsert_state(
         deleted_ids,
         changed_docs,
         standing_curated,
@@ -1170,11 +1172,7 @@ def curated_upsert(
         standing_sets,
         standing_prefix,
     )
-    return (
-        assign_splits(kept, "doc_id")
-        .select("doc_id", "quality", "split")
-        .orderBy("doc_id")
-    )
+    return _curated_rows(stage_new, pairs_new)
 
 
 def _curated_upsert_state(
@@ -1185,29 +1183,30 @@ def _curated_upsert_state(
     standing_pairs: DataFrame,
     standing_sets: DataFrame | None = None,
     standing_prefix: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """:func:`curated_upsert`'s construction, returning the full
-    POST-BATCH LEDGER alongside the kept rows so batches can chain
-    (:func:`curated_upsert_ledger`, the streaming sink, the 3-batch
-    tests): (``stage_new`` — the curated-stage keepers, ``pairs_new``
-    — the verified pair table over them (doc_a, doc_b, jaccard),
-    ``losers_new`` — every gate-passing doc whose text slot a smaller
-    id holds, ``sets_new`` — the forward shingle-set side table over
-    stage_new (just ``corpus_sets ∪ delta_sets`` — the probe already
-    built both, so carrying the artifact forward never re-shingles
-    the corpus), ``kept`` — stage_new minus the near-dup drop set)."""
+    POST-BATCH LEDGER so batches can chain (:func:`curated_upsert_ledger`,
+    the streaming sink, the 3-batch tests): (``stage_new`` — the
+    curated-stage keepers, ``pairs_new`` — the verified pair table over
+    them (doc_a, doc_b, jaccard), ``losers_new`` — every gate-passing
+    doc whose text slot a smaller id holds, ``sets_new`` — the forward
+    shingle-set side table over stage_new (just ``corpus_sets ∪
+    delta_sets`` — the probe already built both, so carrying the
+    artifact forward never re-shingles the corpus)).  All four are
+    lazy; :func:`_curated_rows` derives the curated output from the
+    first two."""
     deleted = deleted_ids.select("doc_id").distinct()
     changed = changed_docs.join(deleted, "doc_id", "left_anti")
     drop = deleted.unionByName(changed.select("doc_id")).distinct()
     stage0, pairs0, succ_r, surv_losers = _curated_retract_state(
         drop, standing_curated, standing_losers, standing_pairs
     )
-    # localCheckpoint staging, DELIBERATELY not stage_fanout (measured,
-    # optimization r15): stage0 feeds four branches and cache-mode
-    # staging keeps statistics, which flipped ~36 downstream joins to
-    # broadcasts — at local fixture scale the extra BroadcastExchange
-    # jobs cost more than the SMJ shuffles they replaced
-    # (curated_upsert[standing] 8.7 → 12.6 s, reverted here).
+    # localCheckpoint staging, DELIBERATELY not stage_fanout (measured):
+    # stage0 feeds four branches and cache-mode staging keeps
+    # statistics, which flipped ~36 downstream joins to broadcasts — at
+    # local fixture scale the extra BroadcastExchange jobs cost more
+    # than the SMJ shuffles they replaced (curated_upsert[standing]
+    # 8.7 → 12.6 s).
     stage0 = stage(stage0)
 
     w = Window.partitionBy("text")
@@ -1217,15 +1216,13 @@ def _curated_upsert_state(
         .where(F.col("doc_id") == F.col("min_id"))
         .drop("min_id", "pred_lang")
     )
-    # Stage the challenge join ONCE (optimization r15): j is a
-    # batch-sized frame (~700 rows at sf0.1) whose lineage is the whole
-    # regex gate chain + text window + the stage0 join, and its
-    # unstaged derivatives (admitted, challengers, succ_c, demoted)
-    # feed FIVE separate consumers — four of them broadcasts, each of
-    # which re-evaluated the full subtree (guide §2.4 reuse; measured
-    # below at the curated_upsert faces).  admitted/challengers are
-    # then cheap filters over the checkpointed rows and need no staging
-    # of their own.
+    # Stage the challenge join ONCE: j is a batch-sized frame (~700
+    # rows at sf0.1) whose lineage is the whole regex gate chain + text
+    # window + the stage0 join, and its unstaged derivatives (admitted,
+    # challengers, succ_c, demoted) feed FIVE separate consumers — four
+    # of them broadcasts, each of which re-evaluated the full subtree.
+    # admitted/challengers are then cheap filters over the
+    # checkpointed rows and need no staging of their own.
     j = stage(
         batch.join(
             stage0.select(F.col("doc_id").alias("keeper_id"), "text"),
@@ -1288,9 +1285,8 @@ def _curated_upsert_state(
         def _rekey(table: DataFrame, payload: list[str]) -> DataFrame:
             # Same-text succession re-key + restriction to the
             # post-challenge stage — shared by the per-doc set rows and
-            # (optimization r15) the per-doc prefix rows, which carry
-            # only text-derived payloads and therefore re-key the same
-            # way.
+            # the per-doc prefix rows, which carry only text-derived
+            # payloads and therefore re-key the same way.
             return (
                 table.join(F.broadcast(m), "doc_id", "left")
                 .select(
@@ -1326,10 +1322,6 @@ def _curated_upsert_state(
 
     pairs_new = pairs_old.unionByName(new_pairs)
     stage_new = stage_old.unionByName(admitted)
-    dropped = pairs_new.select(
-        F.greatest("doc_a", "doc_b").alias("doc_id")
-    ).distinct()
-    kept = stage_new.join(dropped, "doc_id", "left_anti")
     # Loser ledger forward: survivors of the old ledger minus the
     # re-admitted (now keepers), plus the demoted keepers and every
     # gate-passing batch row whose text slot a smaller id holds
@@ -1348,7 +1340,7 @@ def _curated_upsert_state(
         )
     )
     sets_new = corpus_sets.unionByName(delta_sets)
-    return stage_new, pairs_new, losers_new, sets_new, kept
+    return stage_new, pairs_new, losers_new, sets_new
 
 
 def curated_upsert_ledger(
@@ -1370,8 +1362,18 @@ def curated_upsert_ledger(
     inside the upsert, nothing re-derives from the raw corpus — the
     forward sets table in particular is the probe's own
     corpus ∪ delta union, so chained batches never re-shingle
-    (`cli.py curate-ledger-apply` is the runnable form)."""
-    stage_new, pairs_new, losers_new, sets_new, kept = _curated_upsert_state(
+    (`cli.py curate-ledger-apply` is the runnable form).
+
+    ``keepers`` and ``pairs`` come back STAGED (:func:`stage`, the
+    session mode) and the caller owns them: their blocks stay held
+    while the caller keeps the frames, and go when it drops them or
+    releases the session's persisted RDDs.  The curated rows read
+    both, and the pair table is the both-directions probe's output, so
+    without staging the ``pairs`` write and the ``curated`` write each
+    ran the probe (13 and 33 jobs at sf0.001; staged, 1 and 6).  ``losers``,
+    ``sets`` and the curated rows stay lazy: they derive from the
+    input tables at write time."""
+    stage_new, pairs_new, losers_new, sets_new = _curated_upsert_state(
         deleted_ids,
         changed_docs,
         standing_curated,
@@ -1379,12 +1381,14 @@ def curated_upsert_ledger(
         standing_pairs,
         standing_sets,
     )
-    out = (
-        assign_splits(kept, "doc_id")
-        .select("doc_id", "quality", "split")
-        .orderBy("doc_id")
+    # Staged here, not in _curated_upsert_state: the single-output
+    # curated_upsert face reads each frame once, in one query, so a
+    # materialization there would buy nothing.
+    stage_new = stage(stage_new)
+    pairs_new = stage(pairs_new)
+    return stage_new, losers_new, pairs_new, sets_new, _curated_rows(
+        stage_new, pairs_new
     )
-    return stage_new, losers_new, pairs_new, sets_new, out
 
 
 UPSERT_COPY_MOD = 29  # the challenge/reverse-witness-planting classes
@@ -1447,12 +1451,10 @@ def curated_upsert_fixture(docs: DataFrame) -> DataFrame:
     # signatures path, ≡ in-call by test_curated_upsert_persisted_sets_
     # and_succession_chain): the probe's corpus side becomes same-text
     # re-keys of those rows instead of a fresh shingle pass over the
-    # whole post-retract stage — measured ~3 s off the face at sf0.1
-    # (optimization r14, guide §2.3 "shuffle keys and metadata instead
-    # of payloads").  Since r15 the ledger RETURNS the explicitly-staged
-    # set table it already built for the pair build (one
-    # materialization, no CacheManager plan-identity coupling — VERDICT
-    # r14 "what's wrong" #5; tests/test_round15.py pins the single
+    # whole post-retract stage — measured ~3 s off the face at sf0.1.
+    # The ledger RETURNS the explicitly-staged set table it already
+    # built for the pair build (one materialization, no CacheManager
+    # plan-identity coupling; tests/test_round15.py pins the single
     # shingle build in the physical plan).
     keepers, losers, pairs, sets = curation_standing_ledger(
         base, return_sets=True

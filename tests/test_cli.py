@@ -464,3 +464,81 @@ def test_cli_fingerprints(spark, sf001, tmp_path):
     got = {tuple(r) for r in spark.read.parquet(rep).collect()}
     want = {tuple(r) for r in winnow.fingerprint_report(docs).collect()}
     assert got == want
+
+
+def test_cli_curate_ledger_init_and_chained_applies(spark, tmp_path, capsys):
+    """`curate-ledger-init`, then two chained `curate-ledger-apply`
+    batches (deletes, re-texts, a verbatim copy of a larger id and an
+    insert): each batch's ``curated.parquet`` equals `curated_corpus`
+    over the accumulated corpus.  The init's sets table is the keepers'
+    shingle sets, and ``--out`` equal to ``--ledger`` exits 2."""
+    from export_oltp_to_olap_spark.operators.neardup import ngram_shingle_sets
+    from export_oltp_to_olap_spark.plans.curation import curated_corpus
+
+    docs = spark.read.parquet(os.path.join(SRC, "documents.parquet")).select(
+        "doc_id", "text"
+    )
+    corpus = str(tmp_path / "corpus.parquet")
+    docs.write.parquet(corpus)
+    live = {r.doc_id: r.text for r in docs.collect()}
+    ids = sorted(live)
+
+    ledger = str(tmp_path / "ledger_0")
+    assert main(["curate-ledger-init", "--corpus", corpus, "--out", ledger], spark=spark) == 0
+    keepers = spark.read.parquet(os.path.join(ledger, "keepers.parquet"))
+    want_sets = {
+        (r.doc_id, tuple(sorted(r.shs)), r.n_sh)
+        for r in ngram_shingle_sets(keepers.select("doc_id", "text")).collect()
+    }
+    got_sets = {
+        (r.doc_id, tuple(sorted(r.shs)), r.n_sh)
+        for r in spark.read.parquet(os.path.join(ledger, "sets.parquet")).collect()
+    }
+    assert got_sets == want_sets and want_sets
+
+    for i, (dmod, cmod) in enumerate([(11, 7), (13, 5)]):
+        deletes = [d for d in ids if d % dmod == 0 and d in live]
+        upserts = {
+            d: live[d] + f" cli edit {i}"
+            for d in ids
+            if d % cmod == 0 and d % dmod and d in live
+        }
+        donor, victim = ids[10 * i + 4], ids[10 * i + 3]
+        if donor in live and victim in live and victim not in deletes:
+            upserts[victim] = live[donor]
+        upserts[ids[-1] + 1 + i] = live[ids[20 + i]] + f" cli insert {i}"
+        batch = str(tmp_path / f"batch_{i}.json")
+        events = [{"doc_id": d, "op": "delete", "text": None} for d in deletes] + [
+            {"doc_id": d, "op": "upsert", "text": t} for d, t in upserts.items()
+        ]
+        with open(batch, "w") as f:
+            f.writelines(json.dumps(e) + "\n" for e in events)
+        for d in deletes:
+            live.pop(d)
+        live.update(upserts)
+
+        nxt = str(tmp_path / f"ledger_{i + 1}")
+        rc = main(
+            ["curate-ledger-apply", "--ledger", ledger, "--batch", batch, "--out", nxt],
+            spark=spark,
+        )
+        assert rc == 0
+        acc = spark.createDataFrame(sorted(live.items()), "doc_id long, text string")
+        want = {
+            tuple(r)
+            for r in curated_corpus(acc).select("doc_id", "quality", "split").collect()
+        }
+        got = {
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(nxt, "curated.parquet")).collect()
+        }
+        assert got == want and want, f"batch {i}"
+        ledger = nxt
+
+    capsys.readouterr()
+    rc = main(
+        ["curate-ledger-apply", "--ledger", ledger, "--batch", batch, "--out", ledger],
+        spark=spark,
+    )
+    assert rc == 2
+    assert "--out must differ from --ledger" in capsys.readouterr().err
